@@ -5,8 +5,10 @@ oracle SQL over the same testdata tables. Usage:
 
     python3 scripts/check_oracle.py /root/testdata/sf0.01 [outDir]
 
+Verify runs with java.io.tmpdir set to a fresh directory; any graft-* entry
+left there after the JVM exits is a leaked artifact dir and fails the check.
 Pass --no-spark to reuse an existing outDir without re-running Verify."""
-import sys, os, json, subprocess, glob
+import sys, os, json, subprocess, glob, shutil, tempfile
 
 import duckdb
 
@@ -32,10 +34,20 @@ def canon(rows, cols, sort_rows):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = sys.argv[2] if len(sys.argv) > 2 and not sys.argv[2].startswith("--") else "/tmp/graft-verify-out"
+    leaked = []
     if "--no-spark" not in sys.argv:
-        subprocess.run(["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir}'],
-                       cwd="/root/repo", check=True,
-                       stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+        tmp = tempfile.mkdtemp(prefix="check-oracle-tmp-")
+        env = dict(os.environ)
+        env["SPARK_GRAFT_EXTRA_JAVA_OPTS"] = (
+            env.get("SPARK_GRAFT_EXTRA_JAVA_OPTS", "") + f" -Djava.io.tmpdir={tmp}").strip()
+        try:
+            subprocess.run(["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir}'],
+                           cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                           env=env, check=True,
+                           stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+            leaked = sorted(os.path.basename(p) for p in glob.glob(f"{tmp}/graft-*"))
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 
     con = duckdb.connect()
@@ -85,7 +97,9 @@ def main():
             print(f"ROWS {name}: {n}")
 
     print(f"\n{n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    if leaked:
+        print(f"FAIL Verify left {len(leaked)} graft-* entries in java.io.tmpdir: {leaked}")
+    sys.exit(1 if n_fail or leaked else 0)
 
 
 if __name__ == "__main__":

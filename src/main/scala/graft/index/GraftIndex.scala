@@ -1275,12 +1275,6 @@ object GraftIndex {
     "binary_data" -> Seq("binary_data_hash"),
     "scripts"     -> Seq("script_hash"))
 
-  /** Parse a positive-long graft conf, failing loudly AT THE READ with the
-    * conf key in the message — the [[graft.llm.Sampling.shardRanked]]
-    * `require` discipline. Without this a malformed value surfaces as a
-    * bare NumberFormatException at query/write time and a non-positive
-    * bitsPerKey as a negative sketch size inside BloomFilterAggregate,
-    * both far from the misconfigured key. */
   /** Conf-isolated sibling session (same SparkContext, SparkConf defaults)
     * with AQE off, for writes whose output is single-partition by
     * construction — see the writeSegmentAt note. Cached per parent session;
@@ -1298,6 +1292,12 @@ object GraftIndex {
       ns
     })
 
+  /** Parse a positive-long graft conf, failing loudly AT THE READ with the
+    * conf key in the message — the [[graft.llm.Sampling.shardRanked]]
+    * `require` discipline. Without this a malformed value surfaces as a
+    * bare NumberFormatException at query/write time and a non-positive
+    * bitsPerKey as a negative sketch size inside BloomFilterAggregate,
+    * both far from the misconfigured key. */
   private[index] def positiveLongConf(spark: org.apache.spark.sql.SparkSession,
                                       key: String, default: Long): Long = {
     val v = spark.conf.getOption(key).map { s =>

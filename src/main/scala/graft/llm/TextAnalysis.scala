@@ -739,8 +739,10 @@ object TextAnalysis {
     * quantizes log₂[p(ab) / (p(a)·p(b))] with every term order-free and
     * engine-exact; ties break lexically on the pair.
     *
-    * Scale shape: TWO corpus explodes (adjacent pairs; unigrams) — each
-    * feeding ONE map-side-combined aggregate; both totals re-aggregate the
+    * Scale shape: ONE corpus explode (adjacent pairs) feeding ONE
+    * map-side-combined pair aggregate; the unigram counts are that
+    * aggregate's w1 marginal plus each document's last token (one
+    * non-exploded row per doc), both totals re-aggregate the
     * already-aggregated count frames (never the corpus), the unigram model
     * is vocabulary-sized and joins back as broadcasts, and the top-k is a
     * TakeOrdered, never a global sort. */

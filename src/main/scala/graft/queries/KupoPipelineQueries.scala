@@ -123,20 +123,14 @@ object KupoPipelineQueries {
             concat(lit("{\"json\": \"w"), (col("o_orderkey") % 10).cast("string"), lit("\"}"))))
           .as("metadata"))).as("txs"))
 
-  private val cache = scala.collection.mutable.Map.empty[String, GraftIndex]
-
   /** Index for the segment-tiering query: the Shelley derivation ingested
     * as FOUR micro-batch appends (disjoint created_at % 4 slices → four
     * segments), then `compactSegments` tiers them to two and vacuum
     * reclaims the merge inputs — the oracle passes only if the verbatim
     * re-filing lost and duplicated nothing, spends included. */
-  private val tieredCache = scala.collection.mutable.Map.empty[String, GraftIndex]
-
-  private def tieredIndex(s: SparkSession, dir: String): GraftIndex = synchronized {
-    tieredCache.getOrElseUpdate(dir, {
-      val ix = new GraftIndex(s,
-        java.nio.file.Files.createTempDirectory("graft-tier").toString,
-        vacuumGraceMs = 0L)
+  private def tieredIndex(s: SparkSession, dir: String): GraftIndex =
+    ArtifactStore(s, dir, "kupo-tier") {
+      val ix = new GraftIndex(s, ArtifactStore.dir(s, "tier"), vacuumGraceMs = 0L)
       val inputs = derivedShelleyInputs(s, dir).cache()
       (0 until 4).foreach(k =>
         ix.append("inputs", inputs.where(col("created_at") % 4 === k)))
@@ -145,8 +139,7 @@ object KupoPipelineQueries {
       ix.compactSegments("inputs", maxSegments = 2)
       ix.vacuum(0L)
       ix
-    })
-  }
+    }
 
   /** Index + retained snapshot version for the time-travel query: built
     * once per sfDir with manifestRetention = 3, the cred7 slice of the
@@ -154,13 +147,9 @@ object KupoPipelineQueries {
     * deleteInputs mutating the live state — so `asOf(version)` observably
     * differs from the current manifest and the oracle checks the pinned
     * snapshot, not the mutated head. */
-  private val asofCache = scala.collection.mutable.Map.empty[String, (GraftIndex, Long)]
-
-  private def snapshotIndex(s: SparkSession, dir: String): (GraftIndex, Long) = synchronized {
-    asofCache.getOrElseUpdate(dir, {
-      val ix = new GraftIndex(s,
-        java.nio.file.Files.createTempDirectory("graft-asof").toString,
-        manifestRetention = 3)
+  private def snapshotIndex(s: SparkSession, dir: String): (GraftIndex, Long) =
+    ArtifactStore(s, dir, "kupo-asof") {
+      val ix = new GraftIndex(s, ArtifactStore.dir(s, "asof"), manifestRetention = 3)
       val inputs = derivedShelleyInputs(s, dir)
         .where(graft.model.Pattern.MatchDelegation(cred7).toPredicate)
         .cache()
@@ -175,8 +164,7 @@ object KupoPipelineQueries {
       graft.index.Mutations.deleteInputs(ix,
         Set[graft.model.Pattern](graft.model.Pattern.MatchPolicyId(policy2)))
       (ix, snapVer)
-    })
-  }
+    }
 
   /** Index for the schema-migration query: the Shelley derivation written
     * at the CURRENT schema, then DOWN-CONVERTED to schema v1 (every inputs
@@ -190,11 +178,9 @@ object KupoPipelineQueries {
     * AND the provenance columns really round-tripped through the v1 hole
     * (they must read NULL — scanning the unmigrated source would leak the
     * original 'rdmr…' values and hash-mismatch). */
-  private val migratedCache = scala.collection.mutable.Map.empty[String, GraftIndex]
-
-  private def migratedIndex(s: SparkSession, dir: String): GraftIndex = synchronized {
-    migratedCache.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft-mig").toString
+  private def migratedIndex(s: SparkSession, dir: String): GraftIndex =
+    ArtifactStore(s, dir, "kupo-mig") {
+      val root = ArtifactStore.dir(s, "mig")
       val ix = new GraftIndex(s, root, vacuumGraceMs = 0L)
       ix.replace("inputs", derivedShelleyInputs(s, dir))
       val conf = s.sessionState.newHadoopConf()
@@ -220,8 +206,7 @@ object KupoPipelineQueries {
       require(old.migrate() == 5, "expected the five-step v1->v6 chain")
       old.vacuum(0L)
       old
-    })
-  }
+    }
 
   private val lastCopyDir = new java.util.concurrent.atomic.AtomicReference[String]
 
@@ -239,8 +224,8 @@ object KupoPipelineQueries {
   /** Rotating temp root for q_kupo_append_backfill's per-execution index —
     * its own rotator (not [[freshCopyDir]]'s) so the two mutation-query
     * families can never reap each other's still-scanning directories. */
-  private def freshBackfillDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-backfill").toString
+  private def freshBackfillDir(s: SparkSession): String = {
+    val dir = ArtifactStore.dir(s, "backfill")
     reapAsync(lastBackfillDir.getAndSet(dir))
     dir
   }
@@ -255,35 +240,27 @@ object KupoPipelineQueries {
   private def reapAsync(old: String): Unit = {
     if (old == null) return
     val t = new Thread(() => {
-      try {
-        val p = java.nio.file.Paths.get(old)
-        if (java.nio.file.Files.exists(p)) {
-          val walk = java.nio.file.Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-          finally walk.close()
-        }
-      } catch { case _: Throwable => () } // best-effort /tmp reaping
+      try ArtifactStore.deleteTree(java.nio.file.Paths.get(old))
+      catch { case _: Throwable => () } // best-effort /tmp reaping
     }, "graft-dir-reaper")
     t.setDaemon(true)
     t.start()
   }
 
-  private def freshCopyDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-copy").toString
+  private def freshCopyDir(s: SparkSession): String = {
+    val dir = ArtifactStore.dir(s, "copy")
     reapAsync(lastCopyDir.getAndSet(dir))
     dir
   }
 
-  /** Build (once per sfDir per JVM) a real GraftIndex from the derivation —
+  /** Build (once per sfDir per SparkContext) a real GraftIndex from the derivation —
     * the index is immutable here, so the kupo queries share it the way a
     * deployment shares one index across many reads. */
-  def buildIndex(s: SparkSession, dir: String): GraftIndex = synchronized {
-    cache.getOrElseUpdate(dir, buildIndexUncached(s, dir))
-  }
+  def buildIndex(s: SparkSession, dir: String): GraftIndex =
+    ArtifactStore(s, dir, "kupo")(buildIndexUncached(s, dir))
 
   private def buildIndexUncached(s: SparkSession, dir: String): GraftIndex = {
-    val ix = new GraftIndex(s, java.nio.file.Files.createTempDirectory("graft-kupo").toString)
+    val ix = new GraftIndex(s, ArtifactStore.dir(s, "kupo"))
     val inputs = derivedInputs(s, dir).cache()
     val checkpoints = inputs.select(col("created_at").as("slot_no"))
       .union(inputs.where(col("spent_at").isNotNull).select(col("spent_at")))
@@ -697,7 +674,7 @@ object KupoPipelineQueries {
     QueryDef("q_kupo_copy_database",
       (s, d) => {
         val src = buildIndex(s, d)
-        val dst = graft.index.Mutations.copyFiltered(src, freshCopyDir(),
+        val dst = graft.index.Mutations.copyFiltered(src, freshCopyDir(s),
           Set[graft.model.Pattern](graft.model.Pattern.MatchDelegation(cred7)))
         dst.table("inputs")
           .select(col("tx_id").as("transaction_id"), col("output_index"),
@@ -718,7 +695,7 @@ object KupoPipelineQueries {
     QueryDef("q_kupo_delete_matches",
       (s, d) => {
         val src = buildIndex(s, d)
-        val dst = graft.index.Mutations.copyFiltered(src, freshCopyDir(),
+        val dst = graft.index.Mutations.copyFiltered(src, freshCopyDir(s),
           Set[graft.model.Pattern](graft.model.Pattern.MatchDelegation(cred7)))
         graft.index.Mutations.deleteInputs(dst,
           Set[graft.model.Pattern](graft.model.Pattern.MatchPolicyId(policy2)))
@@ -748,7 +725,7 @@ object KupoPipelineQueries {
     // 1/16 slot-parity slices so the per-execution index build stays small.
     QueryDef("q_kupo_append_backfill",
       (s, d) => {
-        val ix = new GraftIndex(s, freshBackfillDir(), vacuumGraceMs = 0L)
+        val ix = new GraftIndex(s, freshBackfillDir(s), vacuumGraceMs = 0L)
         // ONE scan of the source: the two bands and bandB's two side-table
         // frames previously each re-ran the full lineitem scan + md5
         // derivation (4 single-task ~0.3 s jobs per execution, JobTrace-

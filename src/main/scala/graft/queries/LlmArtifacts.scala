@@ -13,6 +13,18 @@ import QueryDef.table
   * double fold, bit-identical between Spark's `aggregate` HOF and DuckDB's
   * list_cosine_similarity (verified empirically).
   *
+  * Storage: every artifact is an [[ArtifactStore]] entry, built once per
+  * (dataset dir, kind) — e.g. (d, "grams"), (d, "sets-token") — and dropped,
+  * files included, when the SparkContext stops. Each accessor keeps one of
+  * two media:
+  *  - parquet under the store's root ([[ArtifactStore.parquet]]) for the
+  *    artifacts whose consumers are dominated by re-SCANNING array columns:
+  *    materializing array rows out of the in-memory columnar cache measured
+  *    ~6-7 taskSec per scan at sf0.1 (JobTrace, Jaccard set arrays) where
+  *    the vectorized parquet reader serves the same rows for ~1. Build cost
+  *    is identical to .cache() (one pass at warm);
+  *  - `.cache()` for the rest; the per-accessor notes give the reasons.
+  *
   * Scale notes: every shape here is a groupBy/join on a derived key — at
   * 100 TB the shingle explode is the big intermediate, bounded by banding
   * (LSH) so candidate pairs stay ~linear in near-dup count. */
@@ -20,35 +32,14 @@ private[queries] object LlmArtifacts {
 
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
-  /** Cached-per-dataset LSH index artifacts: the distinct shingle-set frame,
-    * the distinct token-set frame, the wide MinHash signature frame, and the
+  /** Per-dataset LSH index artifacts: the distinct shingle-set frame, the
+    * distinct token-set frame, the wide MinHash signature frame, and the
     * candidate-pair set. Deployments compute these once and persist them; the
     * query family reuses them the way the kupo queries share one built index.
     * Everything shingle-shaped derives from ONE corpus explode (`gramsOf`). */
-  val gramsCache = scala.collection.mutable.Map.empty[String, DataFrame]
-  val tokensCache = scala.collection.mutable.Map.empty[String, DataFrame]
-  val sigsCache = scala.collection.mutable.Map.empty[String, DataFrame]
-  val pairsCache = scala.collection.mutable.Map.empty[String, DataFrame]
-  val setsCache = scala.collection.mutable.Map.empty[(String, String), DataFrame]
-
-  /** Materialize an artifact frame to parquet and hand back the read —
-    * the storage medium for artifacts whose consumers are dominated by
-    * re-SCANNING array columns: materializing array rows out of the
-    * in-memory columnar cache measured ~6-7 taskSec per scan at sf0.1
-    * (JobTrace, Jaccard set arrays) where the vectorized parquet reader
-    * serves the same rows for ~1. Build cost is identical to .cache()
-    * (one pass at warm); same established warm-artifact policy, different
-    * medium. */
-  private def parquetBacked(df: DataFrame, tag: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-art-$tag-").toString
-    df.write.mode("overwrite").parquet(dir)
-    df.sparkSession.read.parquet(dir)
-  }
-
   def setsOf(kind: String, elems: DataFrame, elemCol: String, d: String): DataFrame =
-    synchronized {
-      setsCache.getOrElseUpdate((d, kind),
-        parquetBacked(graft.llm.Dedup.elementSets(elems, elemCol), s"sets-$kind"))
+    ArtifactStore(elems.sparkSession, d, s"sets-$kind") {
+      ArtifactStore.parquet(Dedup.elementSets(elems, elemCol), s"sets-$kind")
     }
 
   /** The testdata corpus is ONE small parquet file → one input partition —
@@ -58,13 +49,11 @@ private[queries] object LlmArtifacts {
   def spreadDocs(s: SparkSession, d: String): DataFrame =
     table(s, d, "documents").repartition(s.sparkContext.defaultParallelism)
 
-  def gramsOf(s: SparkSession, d: String): DataFrame = synchronized {
-    gramsCache.getOrElseUpdate(d,
-      parquetBacked(graft.llm.Dedup.charGrams(spreadDocs(s, d), n = 8), "grams"))
+  def gramsOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "grams") {
+    ArtifactStore.parquet(Dedup.charGrams(spreadDocs(s, d), n = 8), "grams")
   }
-  def tokensOf(s: SparkSession, d: String): DataFrame = synchronized {
-    tokensCache.getOrElseUpdate(d,
-      parquetBacked(graft.llm.Dedup.docTokens(spreadDocs(s, d)), "tokens"))
+  def tokensOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "tokens") {
+    ArtifactStore.parquet(Dedup.docTokens(spreadDocs(s, d)), "tokens")
   }
 
   // NOTE (r9, measured): sharing a CACHED (source, doc_id, token) explode
@@ -76,29 +65,18 @@ private[queries] object LlmArtifacts {
   // while the cache breaks the span and pays block decompression per
   // pass. The shingle/signature caches above earn their keep because
   // their BUILDS are expensive (hashing, banding), not the scan.
-  def sigsOf(s: SparkSession, d: String): DataFrame = synchronized {
-    sigsCache.getOrElseUpdate(d,
-      graft.llm.Dedup.minhashFromGrams(gramsOf(s, d), numHashes = 4).cache())
+  def sigsOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "sigs") {
+    Dedup.minhashFromGrams(gramsOf(s, d), numHashes = 4).cache()
   }
-  def pairsOf(s: SparkSession, d: String): DataFrame = synchronized {
-    pairsCache.getOrElseUpdate(d,
-      graft.llm.Dedup.lshCandidatePairs(sigsOf(s, d), bands = 2, rowsPerBand = 2).cache())
+  def pairsOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "pairs") {
+    Dedup.lshCandidatePairs(sigsOf(s, d), bands = 2, rowsPerBand = 2).cache()
   }
-
-  val bucketsCache = scala.collection.mutable.Map.empty[String, DataFrame]
-  val ivfCache = scala.collection.mutable.Map.empty[String, DataFrame]
-  val simhashCache = scala.collection.mutable.Map.empty[String, DataFrame]
-  val dhashCache = scala.collection.mutable.Map.empty[String, DataFrame]
-  val winnowCache = scala.collection.mutable.Map.empty[String, DataFrame]
-  val int8Cache = scala.collection.mutable.Map.empty[String, DataFrame]
-  val clustersCache = scala.collection.mutable.Map.empty[String, DataFrame]
 
   /** Connected-component cluster assignment over the LSH pairs — the
     * persisted dedup-decision artifact (a deployment materializes it once
     * per corpus snapshot; the iterative build is the ingest-side job). */
-  def clustersOf(s: SparkSession, d: String): DataFrame = synchronized {
-    clustersCache.getOrElseUpdate(d,
-      graft.llm.Dedup.duplicateClusters(pairsOf(s, d)).cache())
+  def clustersOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "clusters") {
+    Dedup.duplicateClusters(pairsOf(s, d)).cache()
   }
 
   /** SemDeDup threshold: the synthetic embeddings are random (within-cell
@@ -107,21 +85,18 @@ private[queries] object LlmArtifacts {
     * sf0.001, ~1.7k at sf0.1 incl. a 390-member component), high enough that
     * most vectors stay singletons. A real corpus uses ~0.95+. */
   val SemDedupTau = 0.35
-  val semClustersCache = scala.collection.mutable.Map.empty[String, DataFrame]
 
   /** Semantic duplicate-group map (connected components over the within-cell
     * cosine pairs) — the persisted SemDeDup decision artifact; the iterative
     * group build is the ingest-side job, exactly like [[clustersOf]]. */
-  def semClustersOf(s: SparkSession, d: String): DataFrame = synchronized {
-    semClustersCache.getOrElseUpdate(d,
-      Dedup.duplicateClusters(Dedup.semanticPairs(ivfOf(s, d), SemDedupTau)).cache())
+  def semClustersOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "sem-clusters") {
+    Dedup.duplicateClusters(Dedup.semanticPairs(ivfOf(s, d), SemDedupTau)).cache()
   }
 
   /** Per-doc 16-bit SimHash signatures — cached artifact shared by the
     * signature dump and the banded pair-retrieval query. */
-  def simhashOf(s: SparkSession, d: String): DataFrame = synchronized {
-    simhashCache.getOrElseUpdate(d,
-      graft.llm.Dedup.simhash(spreadDocs(s, d), bits = 16).cache())
+  def simhashOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "simhash") {
+    Dedup.simhash(spreadDocs(s, d), bits = 16).cache()
   }
 
   /** Per-image dHash fingerprints — cached artifact for the perceptual
@@ -131,13 +106,10 @@ private[queries] object LlmArtifacts {
     * measured 6× slower at sf0.1). Fingerprinting is one map pass, so the
     * cache holds n×16 bytes; a production corpus writes the fingerprint
     * column to parquet at ingest, same shape. */
-  def dhashOf(s: SparkSession, d: String): DataFrame = synchronized {
-    dhashCache.getOrElseUpdate(d,
-      graft.llm.Multimodal.dHash(graft.llm.Multimodal.grayscaleGrid(
-        table(s, d, "embeddings"), "vec_id", "embedding"), w = 8, h = 8).cache())
+  def dhashOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "dhash") {
+    graft.llm.Multimodal.dHash(graft.llm.Multimodal.grayscaleGrid(
+      table(s, d, "embeddings"), "vec_id", "embedding"), w = 8, h = 8).cache()
   }
-
-  val decodedDhashCache = scala.collection.mutable.Map.empty[String, DataFrame]
 
   /** dHash fingerprints computed from REAL PNG bytes: the grayscale grids
     * are encoded to actual PNG payloads and decoded back through
@@ -145,19 +117,15 @@ private[queries] object LlmArtifacts {
     * anywhere in the path. Materialized for the same CollapseProject
     * reason as [[dhashOf]], and because the encode+decode round-trip
     * should run once, not once per banded join reference. */
-  def decodedDhashOf(s: SparkSession, d: String): DataFrame = synchronized {
-    decodedDhashCache.getOrElseUpdate(d, {
-      implicit val sp: SparkSession = s
-      val grids = graft.llm.Multimodal.grayscaleGrid(
-        table(s, d, "embeddings"), "vec_id", "embedding")
-      val png = graft.llm.Multimodal.encodePngGrid(grids, w = 8, h = 8)
-      val decoded = graft.llm.Multimodal.decodeGrayGrid(png)
-      graft.llm.Multimodal.dHash(decoded, w = 8, h = 8,
-        idCol = "media_id", pxCol = "px").cache()
-    })
+  def decodedDhashOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "decoded-dhash") {
+    implicit val sp: SparkSession = s
+    val grids = graft.llm.Multimodal.grayscaleGrid(
+      table(s, d, "embeddings"), "vec_id", "embedding")
+    val png = graft.llm.Multimodal.encodePngGrid(grids, w = 8, h = 8)
+    val decoded = graft.llm.Multimodal.decodeGrayGrid(png)
+    graft.llm.Multimodal.dHash(decoded, w = 8, h = 8,
+      idCol = "media_id", pxCol = "px").cache()
   }
-
-  val mixedDecodedDhashCache = scala.collection.mutable.Map.empty[String, DataFrame]
 
   /** [[decodedDhashOf]] over a MIXED-CONTAINER corpus: each grid encodes
     * into png / bmp / gif by vec_id % 3 and decodes back through the ONE
@@ -166,8 +134,8 @@ private[queries] object LlmArtifacts {
     * so the fingerprints must equal the pure-grid derivation exactly; any
     * per-format corruption (BMP row order, GIF palette quantization drift)
     * hash-mismatches the oracle. */
-  def mixedDecodedDhashOf(s: SparkSession, d: String): DataFrame = synchronized {
-    mixedDecodedDhashCache.getOrElseUpdate(d, {
+  def mixedDecodedDhashOf(s: SparkSession, d: String): DataFrame =
+    ArtifactStore(s, d, "mixed-decoded-dhash") {
       implicit val sp: SparkSession = s
       val grids = graft.llm.Multimodal.grayscaleGrid(
         table(s, d, "embeddings"), "vec_id", "embedding")
@@ -176,27 +144,23 @@ private[queries] object LlmArtifacts {
       val decoded = graft.llm.Multimodal.decodeGrayGrid(mixed)
       graft.llm.Multimodal.dHash(decoded, w = 8, h = 8,
         idCol = "media_id", pxCol = "px").cache()
-    })
-  }
+    }
 
   /** Zero-point-centered int8 code frame — the persisted artifact of the
     * scalar-quantized index (a deployment calibrates once at ingest and
     * writes the code column to parquet). Materialized so the scan half
     * reads codes, not a re-derived calibration subtree per consumer —
     * same discipline as [[dhashOf]]. */
-  def int8CodesOf(s: SparkSession, d: String): DataFrame = synchronized {
-    int8Cache.getOrElseUpdate(d,
-      graft.llm.Similarity.centeredInt8Codes(spreadEmbeddings(s, d)).cache())
+  def int8CodesOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "int8") {
+    Similarity.centeredInt8Codes(spreadEmbeddings(s, d)).cache()
   }
 
   /** Per-doc winnowing fingerprints (k=8, w=4) — cached artifact shared by
     * the fingerprint report and the overlap-pairing query (the explode +
     * per-doc window is the expensive part; both queries read the result). */
-  def winnowOf(s: SparkSession, d: String): DataFrame = synchronized {
-    winnowCache.getOrElseUpdate(d,
-      parquetBacked(
-        graft.llm.TextAnalysis.winnowingFingerprints(spreadDocs(s, d), k = 8, w = 4),
-        "winnow"))
+  def winnowOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "winnow") {
+    ArtifactStore.parquet(
+      TextAnalysis.winnowingFingerprints(spreadDocs(s, d), k = 8, w = 4), "winnow")
   }
 
   /** The per-doc simhash derivation as a DuckDB CTE (mirrors Dedup.simhash). */
@@ -219,24 +183,20 @@ private[queries] object LlmArtifacts {
 
   /** Hyperplane-bucket index over the embeddings (planes = 4 fixed corpus
     * vectors) — the persisted near-dup artifact. */
-  def bucketsOf(s: SparkSession, d: String): DataFrame = synchronized {
-    bucketsCache.getOrElseUpdate(d, {
-      val emb = spreadEmbeddings(s, d)
-      val planes = emb.where(col("vec_id").between(1, 4))
-        .select(col("vec_id").as("plane_id"), col("embedding").as("plane"))
-      graft.llm.Dedup.embeddingBuckets(emb, planes).cache()
-    })
+  def bucketsOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "buckets") {
+    val emb = spreadEmbeddings(s, d)
+    val planes = emb.where(col("vec_id").between(1, 4))
+      .select(col("vec_id").as("plane_id"), col("embedding").as("plane"))
+    Dedup.embeddingBuckets(emb, planes).cache()
   }
 
   /** IVF cell assignment (4 fixed centroids) — the persisted ANN artifact;
     * a deployment stores it partitioned by cell. */
-  def ivfOf(s: SparkSession, d: String): DataFrame = synchronized {
-    ivfCache.getOrElseUpdate(d, {
-      val emb = spreadEmbeddings(s, d)
-      val centroids = emb.where(col("vec_id").isin(10L, 20L, 30L, 40L))
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
-      parquetBacked(Similarity.assignCells(emb, centroids), "ivf")
-    })
+  def ivfOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "ivf") {
+    val emb = spreadEmbeddings(s, d)
+    val centroids = emb.where(col("vec_id").isin(10L, 20L, 30L, 40L))
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
+    ArtifactStore.parquet(Similarity.assignCells(emb, centroids), "ivf")
   }
 
   /** PQ parameters shared by the codebook, the encode artifact, and the ADC
@@ -244,47 +204,35 @@ private[queries] object LlmArtifacts {
     * 4 fixed corpus vectors (vec_id 10/20/30/40 → code 1..4). */
   val PqM = 4
   val PqSubDim = 16
-  private val pqCbCache = scala.collection.mutable.Map.empty[String, DataFrame]
 
   /** PQ codebook — a trained-once ingest artifact like the encode frames
     * that derive from it (cached r14: every ADC query re-planned and
     * re-executed the codebook lineage per execution — m×ks rows whose
     * BUILD scans the embeddings; a deployment ships it like a model file). */
-  def pqCodebookOf(s: SparkSession, d: String): DataFrame = synchronized {
-    pqCbCache.getOrElseUpdate(d,
-      Similarity.pqCodebook(spreadEmbeddings(s, d),
-        Seq(10L -> 1, 20L -> 2, 30L -> 3, 40L -> 4), PqM, PqSubDim).cache())
+  def pqCodebookOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "pq-codebook") {
+    Similarity.pqCodebook(spreadEmbeddings(s, d),
+      Seq(10L -> 1, 20L -> 2, 30L -> 3, 40L -> 4), PqM, PqSubDim).cache()
   }
-
-  val pqCache = scala.collection.mutable.Map.empty[String, DataFrame]
-  val tfCache = scala.collection.mutable.Map.empty[String, DataFrame]
 
   /** Term-frequency matrix (one row per doc × term) — the persisted TF-IDF
     * artifact; every term statistic derives from it without re-exploding
     * the token stream. */
-  def tfOf(s: SparkSession, d: String): DataFrame = synchronized {
-    tfCache.getOrElseUpdate(d,
-      TextAnalysis.termFrequencies(spreadDocs(s, d)).cache())
+  def tfOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "tf") {
+    TextAnalysis.termFrequencies(spreadDocs(s, d)).cache()
   }
-
-  private val dlCache = scala.collection.mutable.Map.empty[String, DataFrame]
 
   /** Per-doc token lengths — the TF family's second persisted artifact
     * (BM25's length normalization reads it on EVERY query; deriving it
     * inline would re-aggregate the whole tf matrix per query). */
-  def dlOf(s: SparkSession, d: String): DataFrame = synchronized {
-    dlCache.getOrElseUpdate(d,
-      TextAnalysis.docLengthsFromTf(tfOf(s, d)).cache())
+  def dlOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "dl") {
+    TextAnalysis.docLengthsFromTf(tfOf(s, d)).cache()
   }
 
   /** PQ-encoded corpus (vec_id + m integer codes) — the persisted compressed
     * ANN artifact; at scale this is the ONLY thing the ADC query scans. */
-  def pqOf(s: SparkSession, d: String): DataFrame = synchronized {
-    pqCache.getOrElseUpdate(d,
-      Similarity.pqEncode(spreadEmbeddings(s, d), pqCodebookOf(s, d), PqM, PqSubDim).cache())
+  def pqOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "pq") {
+    Similarity.pqEncode(spreadEmbeddings(s, d), pqCodebookOf(s, d), PqM, PqSubDim).cache()
   }
-
-  val ivfL2Cache = scala.collection.mutable.Map.empty[String, DataFrame]
 
   /** The fixed coarse-quantizer centroid set shared by the IVF variants
     * (4 corpus vectors). */
@@ -295,39 +243,32 @@ private[queries] object LlmArtifacts {
   /** L2-metric IVF cell assignment (same 4 fixed centroids) — the Euclidean
     * twin of [[ivfOf]]; both are map-only and a deployment persists either
     * partitioned by cell. */
-  def ivfL2Of(s: SparkSession, d: String): DataFrame = synchronized {
-    ivfL2Cache.getOrElseUpdate(d, {
-      parquetBacked(Similarity.assignCells(spreadEmbeddings(s, d),
-        centroidsOf(s, d), metric = "l2"), "ivfl2")
-    })
+  def ivfL2Of(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "ivfl2") {
+    ArtifactStore.parquet(Similarity.assignCells(spreadEmbeddings(s, d),
+      centroidsOf(s, d), metric = "l2"), "ivfl2")
   }
 
   /** Fixed RESIDUAL codebook for the composed IVF-PQ index: 8 codewords per
     * subspace, carved from the residuals of corpus vectors 1..8 (the
     * deterministic stand-in for per-subspace residual k-means —
     * [[Similarity.pqTrainCodebook]] over the residual frame is the trained
-    * path, exercised and recall-gated in LlmScaleRehearsal). */
-  private val ivfPqCbCache = scala.collection.mutable.Map.empty[String, DataFrame]
-
-  def ivfPqCodebookOf(s: SparkSession, d: String): DataFrame = synchronized {
-    // cached like [[pqCodebookOf]]: the five IVF-PQ queries each re-ran
-    // the residual + codebook lineage per execution
-    ivfPqCbCache.getOrElseUpdate(d,
+    * path, exercised and recall-gated in LlmScaleRehearsal). Cached like
+    * [[pqCodebookOf]]: the five IVF-PQ queries each re-ran the residual +
+    * codebook lineage per execution. */
+  def ivfPqCodebookOf(s: SparkSession, d: String): DataFrame =
+    ArtifactStore(s, d, "ivfpq-codebook") {
       Similarity.pqCodebook(
         Similarity.residuals(ivfL2Of(s, d), centroidsOf(s, d))
           .select(col("vec_id"), col("residual").as("embedding")),
-        (1L to 8L).map(i => i -> i.toInt), PqM, PqSubDim).cache())
-  }
-
-  val ivfPqCache = scala.collection.mutable.Map.empty[String, DataFrame]
+        (1L to 8L).map(i => i -> i.toInt), PqM, PqSubDim).cache()
+    }
 
   /** IVF-PQ-encoded corpus (vec_id, cell, m integer codes) — the persisted
     * composed-index artifact; at scale it is partitioned by cell and the ADC
     * query scans only the probed cells' code columns. */
-  def ivfPqOf(s: SparkSession, d: String): DataFrame = synchronized {
-    ivfPqCache.getOrElseUpdate(d,
-      parquetBacked(Similarity.ivfPqEncode(ivfL2Of(s, d), centroidsOf(s, d),
-        ivfPqCodebookOf(s, d), PqM, PqSubDim), "ivfpq"))
+  def ivfPqOf(s: SparkSession, d: String): DataFrame = ArtifactStore(s, d, "ivfpq") {
+    ArtifactStore.parquet(Similarity.ivfPqEncode(ivfL2Of(s, d), centroidsOf(s, d),
+      ivfPqCodebookOf(s, d), PqM, PqSubDim), "ivfpq")
   }
 
   /** Materialize the shared index artifacts (shingle/token sets, MinHash

@@ -283,13 +283,7 @@ object LlmScaleRehearsal {
     // reclaim the sf-sized temp index before the JVM exits — this runs every
     // round, and leaked copies are the same /tmp-accumulation class the
     // freshCopyDir fix exists for (ADVICE r6)
-    locally {
-      val p = java.nio.file.Paths.get(idxDir)
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    graft.queries.ArtifactStore.deleteTree(java.nio.file.Paths.get(idxDir))
 
     // ---- (d) LSH pairs grow linearly in salted corpus replicas ----
     // salting every token keeps each replica's shingle space disjoint, so a

@@ -35,13 +35,8 @@ object SparkSpec {
   private lazy val hookInstalled: Unit =
     sys.addShutdownHook {
       toDelete.forEach { p =>
-        if (java.nio.file.Files.exists(p)) {
-          val walk = java.nio.file.Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-          catch { case _: java.io.IOException => () } // best-effort sweep
-          finally walk.close()
-        }
+        try graft.queries.ArtifactStore.deleteTree(p)
+        catch { case _: java.io.IOException => () } // best-effort sweep
       }
     }
 

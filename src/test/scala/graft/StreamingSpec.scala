@@ -330,13 +330,7 @@ class StreamingSpec extends SparkSpec {
       assert(spark.read.parquet(idxDir).select("vec_id", "cell", "c0", "c1")
         .collect().map(_.toSeq).toSet == batchRows,
         "mid-swap crash must heal losslessly")
-    } finally {
-      val p = java.nio.file.Paths.get(idxDir)
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    } finally graft.queries.ArtifactStore.deleteTree(java.nio.file.Paths.get(idxDir))
   }
 
   test("stateless text operators lift to streaming unchanged (pii scan)") {
