@@ -8,22 +8,29 @@ import org.apache.spark.util.sketch.BloomFilter
 /** Kernel for the manifest-level bloom probe: deserialize one segment's
   * serialized sketch ([[org.apache.spark.util.sketch.BloomFilter]] wire
   * format, the same bytes Spark's own `BloomFilterAggregate` emits) and
-  * test a pre-hashed key. One evaluation per SEGMENT row — the sidecar
-  * table holds one row per (table, column, segment), so per-row
-  * deserialization IS the probe's total work, not a hot-path cost. */
+  * test a pre-hashed key. The index's point-lookup probe
+  * (`GraftIndex.keyCandidates`) runs it in the driver over sketches it
+  * decodes once per sidecar segment and caches; the expression below runs
+  * it per row. */
 object SegmentBloomKernels {
+  def decode(bloom: Array[Byte]): BloomFilter =
+    BloomFilter.readFrom(new java.io.ByteArrayInputStream(bloom))
+
   def mightContain(bloom: Array[Byte], hash: Long): Boolean =
-    BloomFilter.readFrom(new java.io.ByteArrayInputStream(bloom)).mightContainLong(hash)
+    decode(bloom).mightContainLong(hash)
 }
 
 /** might-contain over a serialized bloom COLUMN — the built-in
   * `BloomFilterMightContain` insists its bloom side is a constant or scalar
-  * subquery (it was built for runtime join filtering); this engine probes a
-  * whole TABLE of per-segment blooms with one distributed filter, so the
-  * bloom argument must be an ordinary column. Null-intolerant: a null bloom
-  * or key yields null, which the driver-side probe treats as a conservative
-  * HIT (scan the segment) rather than a prune. Corrupt bloom bytes throw —
-  * fail-loud beats silently pruning a segment that held the answer. */
+  * subquery (it was built for runtime join filtering); this one takes the
+  * bloom as an ordinary column, so a whole TABLE of per-segment blooms can
+  * be probed with one filter in SQL. The index probes in the driver
+  * instead, over cached decoded sketches, so a lookup pays no job; this
+  * expression is the distributed reference that probe is tested against.
+  * Null-intolerant: a null bloom or key
+  * yields null, which callers treat as a conservative HIT (scan the
+  * segment) rather than a prune. Corrupt bloom bytes throw — fail-loud
+  * beats silently pruning a segment that held the answer. */
 case class SegmentBloomMightContain(left: Expression, right: Expression)
     extends BinaryExpression with Predicate {
   override def nullable: Boolean = true

@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 
 /** THE atomic-publish discipline, shared by every crash-recoverable swap in
   * the engine: the kupo index's manifest commit ([[GraftIndex.Manifest.write]]
@@ -23,11 +23,27 @@ object AtomicSwap {
   /** Stage-and-rename a metadata FILE: bytes land whole in `tmp`, then ONE
     * overwrite-rename publishes at `dst`. The rename is the commit point —
     * a reader never observes a torn file, and a crash before the rename
-    * leaves only an ignorable tmp. */
+    * leaves only an ignorable tmp.
+    *
+    * On a checksummed filesystem (the local `file://` one) the file goes
+    * through the raw filesystem underneath ([[GraftIndex.metaFs]]), and
+    * readers read it the same way: the checksummed overwrite-rename deletes
+    * `dst`, renames the file, then renames its `.crc` — a racing reader
+    * could find no file, or new bytes under the old checksum ("Checksum
+    * error"). The raw rename is one atomic replace. A `.crc` left beside
+    * `dst` by an earlier checksummed publish is deleted first, so no
+    * checksummed reader can pair it with the new bytes. */
   def publishFile(conf: Configuration, fs: FileSystem, tmp: Path, dst: Path,
                   bytes: Array[Byte]): Unit = {
     GraftIndex.writeBytes(fs, tmp, bytes)
-    GraftIndex.renameOverwrite(conf, fs, tmp, dst)
+    fs match {
+      case cfs: ChecksumFileSystem =>
+        val raw = cfs.getRawFileSystem
+        raw.delete(cfs.getChecksumFile(dst), false)
+        if (!raw.rename(tmp, dst))
+          throw new java.io.IOException(s"publish $tmp -> $dst failed")
+      case _ => GraftIndex.renameOverwrite(conf, fs, tmp, dst)
+    }
   }
 
   /** Work/trash DIRECTORY publish: every `source` renames aside into

@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.Schemas
-import graft.expressions.SegmentBloomMightContain
+import graft.expressions.SegmentBloomKernels
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil, Options, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, FileUtil, Options, Path}
 
 import java.nio.charset.StandardCharsets
 
@@ -29,11 +29,17 @@ import java.nio.charset.StandardCharsets
   * segments are rewritten. At 100 TB this is the difference between touching
   * a few partitions and rewriting the table.
   */
-final class GraftIndex(val spark: SparkSession, val root: String,
-                       val vacuumGraceMs: Long = GraftIndex.DefaultVacuumGraceMs,
-                       val manifestRetention: Int = 1,
-                       private val pin: Option[GraftIndex.Manifest] = None) {
+final class GraftIndex private (val spark: SparkSession, val root: String,
+                                val vacuumGraceMs: Long,
+                                val manifestRetention: Int,
+                                pin: Option[GraftIndex.Manifest],
+                                memo: GraftIndex.ReadMemo) {
   import GraftIndex._
+
+  def this(spark: SparkSession, root: String,
+           vacuumGraceMs: Long = GraftIndex.DefaultVacuumGraceMs,
+           manifestRetention: Int = 1) =
+    this(spark, root, vacuumGraceMs, manifestRetention, None, new GraftIndex.ReadMemo)
 
   require(manifestRetention >= 1,
     s"manifestRetention must be >= 1, got $manifestRetention")
@@ -169,7 +175,7 @@ final class GraftIndex(val spark: SparkSession, val root: String,
     * vacuum through the facade fail loudly. None when v has aged out. */
   def asOf(version: Long): Option[GraftIndex] =
     asOfVersion(version).map(m =>
-      new GraftIndex(spark, root, vacuumGraceMs, manifestRetention, Some(m)))
+      new GraftIndex(spark, root, vacuumGraceMs, manifestRetention, Some(m), memo))
 
   /** ONE manifest read per QUERY: a read-only facade pinned to the manifest
     * as of NOW. The snapshot-isolation contract ("readers pin one manifest")
@@ -183,13 +189,14 @@ final class GraftIndex(val spark: SparkSession, val root: String,
     * Fails loudly (run-migrate wording, not the historical-snapshot one)
     * when the index needs migration; the concurrent-writer grace story is
     * unchanged (vacuum's grace window protects in-flight pinned readers).
+    * The facade shares this index's read memos (tip, decoded sketches).
     * Idempotent on an already-pinned facade. */
   def pinned: GraftIndex =
     if (pin.isDefined) this
     else {
       val m = manifest
       requireCurrentSchema(m, "pinning a query snapshot")
-      new GraftIndex(spark, root, vacuumGraceMs, manifestRetention, Some(m))
+      new GraftIndex(spark, root, vacuumGraceMs, manifestRetention, Some(m), memo)
     }
 
   /** TIME TRAVEL (`manifestRetention` > 1): every commit also writes its
@@ -374,19 +381,16 @@ final class GraftIndex(val spark: SparkSession, val root: String,
     * but a point query still scheduled ONE TASK PER SEGMENT just to open
     * footers — at 100 TB, task count was the entire remaining cost vs the
     * reference's resident B-tree (SCALE.md §F.4). This moves the membership
-    * test ahead of scheduling: one distributed filter over the NARROW
-    * sidecar table (one row per segment), then a scan of only the candidate
-    * segments. The collect is bounded by the per-(table,column) sidecar row
-    * count — the same order as the manifest the driver already holds.
+    * test ahead of scheduling: [[keyCandidates]] probes the sidecar's
+    * sketches in the driver, then only the candidate segments are scanned.
     *
     * Soundness: blooms never false-negative, so a segment holding the key
     * is always a candidate; a live segment with NO sidecar row (or a null
-    * probe result) is scanned conservatively; stale rows for dead segments
-    * are ignored (the filter runs over the LIVE manifest's paths). The
-    * caller's row predicate still decides membership — pruning, never
-    * filtering. Gated on 2+ surviving segments like the policy/address
-    * window probes: with one segment nothing can be pruned and the probe
-    * job is pure overhead. */
+    * sketch) is scanned conservatively; stale rows for dead segments are
+    * ignored (only the LIVE manifest's paths are looked up). The caller's
+    * row predicate still decides membership — pruning, never filtering.
+    * Gated on 2+ surviving segments like the policy/address window probes:
+    * with one segment nothing can be pruned. */
   def tableKeyPoint(name: String, column: String, key: String,
                     lo: Option[Long] = None, hi: Option[Long] = None): DataFrame = {
     val m = manifest
@@ -400,25 +404,86 @@ final class GraftIndex(val spark: SparkSession, val root: String,
     * unindexed column) — callers then treat every segment as a candidate.
     * Shared by the point-lookup read and the targeted deleteInputs rewrite
     * (the mutation-side use of the same index, like the reference's DELETE
-    * walking its B-trees). */
+    * walking its B-trees).
+    *
+    * Runs in the DRIVER, with no Spark job once the sketches are decoded:
+    * the kernel the [[graft.expressions.SegmentBloomMightContain]]
+    * expression evaluates ([[SegmentBloomKernels]] over `xxhash64(key)`,
+    * seed 42), against sketches cached per sidecar segment (see
+    * [[sketchesOf]]). A distributed filter over the sidecar would cost a
+    * job — ~60–100 ms of scheduling — per point read, to answer a question
+    * whose inputs only change at a commit. */
   private[graft] def keyCandidates(m: Manifest, name: String, column: String,
                                    key: String,
                                    segs: List[Segment]): Option[List[Segment]] = {
     val bloomSegs = m.tables.getOrElse("segment_blooms", Nil)
     if (segs.size < 2 || bloomSegs.isEmpty || !pointBloomColumns(name).contains(column))
       return None
-    val probe = readSegments("segment_blooms", bloomSegs)
-      .where(col("table_name") === name && col("column_name") === column)
-      .select(col("segment_path"),
-        GraftShim.column(SegmentBloomMightContain(
-          GraftShim.expression(col("bloom")),
-          GraftShim.expression(xxhash64(lit(key))))).as("hit"))
-      .collect() // bounded: ≤ one row per segment ever live — manifest-scale
-    val hits = probe.groupBy(_.getString(0)).map { case (p, rs) =>
-      // null probe result → conservative hit (scan the segment)
-      p -> rs.exists(r => r.isNullAt(1) || r.getBoolean(1))
+    val hash = keyHash(key)
+    val hits = scala.collection.mutable.HashMap.empty[String, Boolean]
+    sketchesOf(bloomSegs).foreach { s =>
+      if (s.table == name && s.column == column)
+        // a null sketch → conservative hit (scan the segment)
+        hits(s.segment) = hits.getOrElse(s.segment, false) ||
+          s.bloom.forall(_.mightContainLong(hash))
     }
     Some(segs.filter(s => hits.getOrElse(s.path, true))) // uncovered → scan
+  }
+
+  /** Decoded sketch rows of the given `segment_blooms` segments. Segments
+    * are immutable, so a sidecar segment's decoded rows are cached by its
+    * path for as long as it stays in the manifest: the first read after a
+    * commit decodes only the sidecar segments that commit added, all of
+    * them in ONE job, and every later probe is driver-only. Loading is
+    * lazy, on the read path — commits never pay it. Entries whose sidecar
+    * segment left the probed manifest (compaction, rollback) are dropped
+    * at the next load. A racing facade on another manifest may evict an
+    * entry this probe wanted: its rows are then absent, and absent rows
+    * mean "scan" — slower, never wrong. */
+  private def sketchesOf(bloomSegs: List[Segment]): Seq[Sketch] = {
+    val cache = memo.sketches
+    val missing = bloomSegs.filterNot(s => cache.containsKey(s.path))
+    if (missing.nonEmpty) {
+      val live = bloomSegs.iterator.map(_.path).toSet
+      cache.keySet.removeIf(p => !live(p))
+      // every file lies at <root>/segment_blooms/<segdir>/<file>: the two
+      // directories above the file name ARE the manifest's segment path
+      val loaded = readSegments("segment_blooms", missing)
+        .select(regexp_extract(input_file_name(), "/([^/]+/[^/]+)/[^/]+$", 1),
+          col("table_name"), col("column_name"), col("segment_path"), col("bloom"))
+        .collect()
+        .groupBy(_.getString(0))
+      missing.foreach { s =>
+        cache.put(s.path, loaded.getOrElse(s.path, Array.empty).toSeq.map(r =>
+          Sketch(r.getString(1), r.getString(2), r.getString(3),
+            Option(r.getAs[Array[Byte]](4)).map(SegmentBloomKernels.decode))))
+      }
+    }
+    bloomSegs.flatMap(s => Option(cache.get(s.path)).getOrElse(Nil))
+  }
+
+  /** R8 selectMaxCheckpoint — the most recent checkpoint, memoized by the
+    * live checkpoints segment list. Every routed HTTP read asks for it (the
+    * health snapshot behind the ETag), and the answer depends on nothing
+    * but that list: segments are immutable, and any commit or rollback
+    * that changes checkpoints changes the list, so the memo is exact. A
+    * miss reads only the segments whose max-slot stat can hold the tip.
+    * One volatile slot, shared with every facade of this index: racing
+    * misses each store a correct (list, answer) pair. */
+  def maxCheckpoint: Option[(Long, String)] = {
+    val m = manifest
+    requireCurrentSchema(m, "reading checkpoints")
+    val segs = m.tables.getOrElse("checkpoints", Nil)
+    memo.tip match {
+      case Some((key, tip)) if key == segs => tip
+      case _ =>
+        val top = segs.flatMap(_.maxSlot).maxOption
+        val holders = segs.filter(s => s.maxSlot.isEmpty || s.maxSlot == top)
+        val tip = readSegments("checkpoints", holders).orderBy(col("slot_no").desc).limit(1)
+          .collect().headOption.map(r => (r.getLong(0), r.getString(1)))
+        memo.tip = Some((segs, tip))
+        tip
+    }
   }
 
   /** A segment with a non-nullable stat column and no stats is provably
@@ -434,7 +499,7 @@ final class GraftIndex(val spark: SparkSession, val root: String,
     * serialized bloom per key column, entirely in-plan via Spark's native
     * `BloomFilterAggregate` — the sketch bytes go straight to the sidecar
     * segment without a driver round-trip. Keys are hashed with xxhash64
-    * (seed 42) symmetric with [[tableKeyPoint]]'s probe. */
+    * (seed 42) symmetric with [[keyCandidates]]'s probe. */
   private def bloomFrameFor(table: String, seg: Segment): DataFrame = {
     val cols = pointBloomColumns(table)
     val aggs = cols.map(c => bloomAggColumn(c, seg.rows.getOrElse(1L)).as(s"b_$c"))
@@ -1275,6 +1340,27 @@ object GraftIndex {
     "binary_data" -> Seq("binary_data_hash"),
     "scripts"     -> Seq("script_hash"))
 
+  /** Driver-side read state one index shares with every facade it hands
+    * out ([[GraftIndex.pinned]], [[GraftIndex.asOf]]). Both entries are
+    * keyed by immutable segment identity, so nothing ever invalidates them;
+    * they are only replaced or pruned. */
+  private[index] final class ReadMemo {
+    /** checkpoints segment list → its most recent checkpoint. */
+    @volatile var tip: Option[(List[Segment], Option[(Long, String)])] = None
+    /** `segment_blooms` segment path → its decoded sketch rows. */
+    val sketches = new java.util.concurrent.ConcurrentHashMap[String, Seq[Sketch]]
+  }
+
+  /** One decoded `segment_blooms` row; `bloom` None = null sketch. */
+  private[index] final case class Sketch(table: String, column: String, segment: String,
+                                         bloom: Option[org.apache.spark.util.sketch.BloomFilter])
+
+  /** The probe key's hash: Catalyst's own `xxhash64` (seed 42) evaluated in
+    * the driver — the exact expression [[bloomAggColumn]] folds into every
+    * sketch. */
+  private def keyHash(key: String): Long =
+    new XxHash64(Seq(Literal(key))).eval().asInstanceOf[Long]
+
   /** Conf-isolated sibling session (same SparkContext, SparkConf defaults)
     * with AQE off, for writes whose output is single-partition by
     * construction — see the writeSegmentAt note. Cached per parent session;
@@ -1508,13 +1594,22 @@ object GraftIndex {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
+  /** The filesystem control-plane files (manifests, vacuum bookkeeping)
+    * are read and written through: the raw filesystem under a checksummed
+    * one, `fs` itself on every other scheme. See [[AtomicSwap.publishFile]]
+    * for why a checksummed publish races its readers. */
+  private[index] def metaFs(fs: FileSystem): FileSystem = fs match {
+    case cfs: ChecksumFileSystem => cfs.getRawFileSystem
+    case _                       => fs
+  }
+
   private[index] def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
-    val in = fs.open(p)
+    val in = metaFs(fs).open(p)
     try in.readAllBytes() finally in.close()
   }
 
   private[index] def writeBytes(fs: FileSystem, p: Path, bytes: Array[Byte]): Unit = {
-    val out = fs.create(p, true)
+    val out = metaFs(fs).create(p, true)
     try out.write(bytes) finally out.close()
   }
 

@@ -114,12 +114,22 @@ object PatternManager {
 
   /** R10 GET /checkpoints/{slot}?strict (Http.hs:557-581): greatest
     * checkpoint at-or-before the slot (listAncestorsDesc(slot+1, 1)); strict
-    * mode additionally requires an exact hit. */
+    * mode requires an exact hit. Both read only the segments whose slot
+    * stats allow an answer: strict equality-probes the segments whose
+    * [min, max] contains the slot (one task on a slot-ordered index, not
+    * one per segment), non-strict skips the segments starting after it.
+    * Each is one job: the equality collects its (duplicate-only) rows
+    * whole, where a `limit(1)` would scan partition by partition and pay a
+    * second job whenever the first partition misses. */
   def getCheckpointBySlot(ix: GraftIndex, slot: Long, strict: Boolean = false): Option[(Long, String)] = {
-    val hit = ix.table("checkpoints").where(col("slot_no") <= slot)
-      .orderBy(col("slot_no").desc).limit(1).collect().headOption
-      .map(r => (r.getLong(0), r.getString(1)))
-    if (strict) hit.filter(_._1 == slot) else hit
+    val hit =
+      if (strict)
+        ix.tableSlotRange("checkpoints", Some(slot), Some(slot))
+          .where(col("slot_no") === slot)
+      else
+        ix.tableSlotRange("checkpoints", None, Some(slot))
+          .where(col("slot_no") <= slot).orderBy(col("slot_no").desc).limit(1)
+    hit.collect().headOption.map(r => (r.getLong(0), r.getString(1)))
   }
 
   def currentPatterns(ix: GraftIndex): Set[Pattern] =

@@ -61,6 +61,7 @@ object FoldInputs {
 
     // F1/F2 — segment-pruned scan + pattern predicate + slot-range predicate
     val (lo, hi) = (q.range.lowerBound, q.range.upperBound)
+    val keyed = txKey(pattern, q.filter).filter(_ => q.range.field == RangeField.CreatedAt)
     val base = q.range.field match {
       case RangeField.CreatedAt =>
         // pruning on created_at stats is sound: segments are created-ordered.
@@ -68,7 +69,7 @@ object FoldInputs {
         // the row predicate below keeps exactly the user's range semantics.
         val pruneLo = (lo.toSeq ++ window.map(_._1)).reduceOption(_ max _)
         val pruneHi = (hi.toSeq ++ window.map(_._2)).reduceOption(_ min _)
-        val scan = txKey(pattern, q.filter) match {
+        val scan = keyed match {
           // P7/P8 (*@txid, ix@txid) and ?transaction_id: the membership-
           // sketch prune (schema v6) — only segments whose bloom might hold
           // the key are scheduled; the pushed tx_id equality below still
@@ -150,11 +151,16 @@ object FoldInputs {
     // F6 — the sort triple identifies an output uniquely (block position +
     // output position), so the order is total up to exact-duplicate rows
     // from idempotent re-appends, which compaction dedups and which compare
-    // equal anyway
+    // equal anyway. A tx-keyed result is bounded by ONE transaction's
+    // outputs over the bloom-pruned segments, so it sorts in one partition:
+    // SinglePartition satisfies the global ordering, and the range-bounds
+    // sample job plus the sort shuffle disappear. Every other result keeps
+    // the distributed sort.
     val keys = Seq(col("created_at"), col("transaction_index"), col("output_index"))
+    val bounded = if (keyed.isDefined) resolved.coalesce(1) else resolved
     val sorted = q.order match {
-      case SortDirection.Asc  => resolved.orderBy(keys.map(_.asc): _*)
-      case SortDirection.Desc => resolved.orderBy(keys.map(_.desc): _*)
+      case SortDirection.Asc  => bounded.orderBy(keys.map(_.asc): _*)
+      case SortDirection.Desc => bounded.orderBy(keys.map(_.desc): _*)
     }
 
     // F8 — the result projection (resultToJson field set, Pattern.hs:447-522);
@@ -525,10 +531,9 @@ object FoldInputs {
     ix.table("checkpoints").where(col("slot_no") < slot)
       .orderBy(col("slot_no").desc).limit(n)
 
-  /** R8 selectMaxCheckpoint — argmax as orderBy-limit-1. */
-  def maxCheckpoint(ix: GraftIndex): Option[(Long, String)] =
-    ix.table("checkpoints").orderBy(col("slot_no").desc).limit(1)
-      .collect().headOption.map(r => (r.getLong(0), r.getString(1)))
+  /** R8 selectMaxCheckpoint — argmax as orderBy-limit-1, memoized on the
+    * index by its checkpoints segment list ([[GraftIndex.maxCheckpoint]]). */
+  def maxCheckpoint(ix: GraftIndex): Option[(Long, String)] = ix.maxCheckpoint
 
   private def patternOf(text: String): Pattern =
     Pattern.fromText(text)

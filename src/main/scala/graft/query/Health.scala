@@ -121,7 +121,11 @@ object Health {
     version: String,
     indexes: Option[IndexesPolicy] = None)
 
-  /** Read the health snapshot off the index (one LIMIT-1 checkpoint scan).
+  /** Read the health snapshot off the index. The checkpoint comes from
+    * [[GraftIndex.maxCheckpoint]], memoized on the index and keyed by the
+    * live checkpoints segment list: a repeated snapshot reads the manifest
+    * and runs no Spark job, and any commit or rollback that touches
+    * checkpoints changes the key, so the ETag stays exact.
     * `nodeTip`/`lastBlockAtMs` come from the producer loop, which is where
     * the reference's TVar gets its writes too (Health.hs:58-72);
     * `params` enables the `network_synchronization` gauge. */

@@ -97,13 +97,47 @@ final class HttpApi(
 
   import HttpApi._
 
-  def route(req: Request): Response =
-    try routeUnsafe(req)
-    catch {
-      case e: Api.PointNotFound    => Response.json(400, Api.errorJson(e))
-      case e: Api.PointMismatch    => Response.json(400, Api.errorJson(e))
-      case e: IllegalArgumentException => Response.json(400, Api.errorJson(e))
+  /** Every Spark job a request runs — while routing, and later while its
+    * body streams — carries the description `METHOD /route/{template}`
+    * (`GET /matches/{pattern}`, `GET /checkpoints/{slot}`), never the
+    * request's own keys. The handling thread's previous description (none,
+    * on the server's pool threads) is restored afterwards. */
+  def route(req: Request): Response = {
+    val desc = s"${req.method} ${routeTemplate(req.path)}"
+    withJobDescription(desc) {
+      val r =
+        try routeUnsafe(req)
+        catch {
+          case e: Api.PointNotFound    => Response.json(400, Api.errorJson(e))
+          case e: Api.PointMismatch    => Response.json(400, Api.errorJson(e))
+          case e: IllegalArgumentException => Response.json(400, Api.errorJson(e))
+        }
+      r.copy(write = out => withJobDescription(desc)(r.write(out)))
     }
+  }
+
+  private def withJobDescription[A](desc: String)(f: => A): A = {
+    val sc = ix.spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try f finally sc.setJobDescription(prev)
+  }
+
+  /** The path parameter each route takes after its first segment. */
+  private val routeParams = Map("health" -> "", "metrics" -> "",
+    "checkpoints" -> "{slot}", "metadata" -> "{slot}",
+    "datums" -> "{hash}", "scripts" -> "{hash}",
+    "matches" -> "{pattern}", "patterns" -> "{pattern}")
+
+  private def routeTemplate(path: String): String = {
+    val segs0 = path.split("/").toList.filter(_.nonEmpty)
+    (if (segs0.headOption.contains("v1")) segs0.tail else segs0) match {
+      case r :: rest if routeParams.contains(r) =>
+        if (rest.isEmpty || routeParams(r).isEmpty) s"/$r" else s"/$r/${routeParams(r)}"
+      case Nil => "/"
+      case _   => "/{unknown}"
+    }
+  }
 
   private def routeUnsafe(req: Request): Response = {
     val segs0 = req.path.split("/").toList.filter(_.nonEmpty).map(urlDecode)

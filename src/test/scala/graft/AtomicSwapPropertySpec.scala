@@ -106,4 +106,40 @@ class AtomicSwapPropertySpec extends AnyFunSuite {
       fs.delete(root, true)
     }
   }
+
+  test("manifest publish: a reader racing ~200 commits never fails and never goes back") {
+    import graft.index.GraftIndex.{Manifest, Segment}
+    val (fs, root) = freshFs()
+    val conf = new org.apache.hadoop.conf.Configuration()
+    // the local FS is checksummed: this is the scheme whose publish was a
+    // two-step rename (file, then its .crc)
+    assert(fs.isInstanceOf[org.apache.hadoop.fs.ChecksumFileSystem])
+    val dir = root.toString
+    // manifests of growing size, so consecutive versions differ in length
+    def manifest(v: Long) = Manifest(v, Map("inputs" ->
+      (0L to v % 7).map(i => Segment(f"inputs/seg-$v%06d-$i", Some(i), Some(v))).toList))
+    Manifest.write(dir, manifest(1), conf)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    var reads = 0L
+    val reader = new Thread(() => {
+      var last = 0L
+      while (!done.get) {
+        try {
+          val v = Manifest.read(dir, conf).map(_.version).getOrElse(-1L)
+          if (v < last) errors.add(new AssertionError(s"version went back: $last -> $v"))
+          last = v
+          reads += 1
+        } catch { case e: Throwable => errors.add(e) }
+      }
+    })
+    reader.start()
+    try (2L to 200L).foreach(v => Manifest.write(dir, manifest(v), conf))
+    finally { done.set(true); reader.join() }
+    assert(errors.size == 0,
+      s"${errors.size} of $reads reads failed; first: ${Option(errors.peek).map(_.toString)}")
+    assert(reads > 0)
+    assert(Manifest.read(dir, conf).map(_.version).contains(200L))
+    fs.delete(root, true)
+  }
 }

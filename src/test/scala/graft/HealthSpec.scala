@@ -161,5 +161,13 @@ class HealthSpec extends SparkSpec {
     val h2 = Health.snapshot(ix)
     assert(Health.etag(h2).isDefined && Health.etag(h2) != Some(tag))
     assert(Health.cacheOr(h2, Some(tag))("fresh").isDefined)
+    // rolling that block back restores the earlier tip: the memoized tip is
+    // keyed by the checkpoints segment list, so it follows the rollback
+    graft.index.Mutations.rollbackTo(ix, h.mostRecentCheckpoint.get._1)
+    val h3 = Health.snapshot(ix)
+    assert(Health.etag(h3).contains(tag) && Health.etag(h3) != Health.etag(h2))
+    assert(h3.mostRecentCheckpoint == ix.table("checkpoints")
+      .orderBy(org.apache.spark.sql.functions.col("slot_no").desc).limit(1)
+      .collect().headOption.map(r => (r.getLong(0), r.getString(1))))
   }
 }

@@ -280,6 +280,46 @@ class HttpApiSpec extends SparkSpec {
     }
   }
 
+  test("job budget per read: tx lookup <= 3 jobs, absent key 0, strict checkpoint 1, repeated health 0") {
+    // three+ inputs segments and a non-empty spends delta: the shape where
+    // the sidecar probe engages and the delta joins every tx lookup
+    val ix = new GraftIndex(spark, tmpDir("graft-http-budget"))
+    val ps = Set[Pattern](Pattern.MatchAny(includingBootstrap = true))
+    blocks.grouped(3).foreach(b => Indexer.ingest(ix, FixtureChain.toDf(spark, b), ps))
+    val m = ix.manifest
+    val segs = m.tables("inputs")
+    assert(segs.size >= 3 && m.tables.getOrElse("spends", Nil).nonEmpty)
+    val tx = ix.table("inputs").select("tx_id").head().getString(0)
+    val absent = Iterator.from(1).map(i => f"$i%064x")
+      .find(k => ix.keyCandidates(m, "inputs", "tx_id", k, segs).exists(_.isEmpty)).get
+    val slot = ix.table("checkpoints").select("slot_no").head().getLong(0)
+    val api = new graft.query.HttpApi(ix, () => blocksDf,
+      () => Health.snapshot(ix, Health.ConnectionStatus.Connected))
+    val server = KupoHttpServer.start(api, port = 0)
+    val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+    try org.apache.spark.JobCounter.around(spark.sparkContext) { c =>
+      def jobs(path: String): Seq[String] = {
+        val (r, descs) = c.jobsOf(get(base + path))
+        assert(r.statusCode() == 200, s"$path: ${r.body()}")
+        descs
+      }
+      // the first reads decode the sidecar and memoize the tip
+      jobs(s"/matches/*@$tx"); jobs("/health")
+
+      val present = jobs(s"/matches/*@$tx")
+      assert(present.size <= 3, s"present tx lookup ran ${present.size} jobs")
+      assert(present.forall(_ == "GET /matches/{pattern}"), present)
+      assert(get(s"$base/matches/*@$tx").body().contains(tx))
+      val miss = jobs(s"/matches/*@$absent")
+      assert(miss.isEmpty, s"absent tx lookup ran ${miss.size} jobs")
+      assert(get(s"$base/matches/*@$absent").body() == "[]")
+      val strict = jobs(s"/checkpoints/$slot?strict")
+      assert(strict == Seq("GET /checkpoints/{slot}"), strict)
+      assert(jobs(s"/checkpoints/${slot + 1}?strict").size <= 1)
+      assert(jobs("/health").isEmpty)
+    } finally server.stop(0)
+  }
+
   test("router edges: OPTIONS, 404, 405") {
     withServer { (base, _) =>
       val opt = http.send(JReq.newBuilder(URI.create(s"$base/matches"))

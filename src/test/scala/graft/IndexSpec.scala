@@ -1,6 +1,6 @@
 package graft
 
-import graft.index.{GraftIndex, Mutations}
+import graft.index.{GraftIndex, Mutations, PatternManager}
 import graft.ingest.Indexer
 import graft.model.Pattern
 import graft.tools.FixtureChain
@@ -231,6 +231,25 @@ class IndexSpec extends SparkSpec {
     val anc = FoldInputs.listAncestorsDesc(ix, 50L, 3).collect().map(_.getLong(0)).toSeq
     assert(anc == Seq(40L, 30L, 20L))
     assert(FoldInputs.maxCheckpoint(ix).map(_._1).contains(blocks.map(_.slot).max))
+  }
+
+  test("R10: checkpoint by slot reads only segments that can answer; answers unchanged") {
+    val g = new GraftIndex(spark, tmpDir("graft-cp-slot"))
+    blocks.grouped(3).foreach(b => Indexer.ingest(g, FixtureChain.toDf(spark, b), patterns))
+    val segs = g.manifest.tables("checkpoints")
+    assert(segs.size >= 3)
+    val all = g.table("checkpoints").collect().map(r => (r.getLong(0), r.getString(1)))
+    val slots = all.map(_._1)
+    ((0L to slots.max + 2).filter(s => s % 5 == 0 || slots.contains(s)) :+ slots.max).foreach { s =>
+      val atOrBefore = all.filter(_._1 <= s).maxByOption(_._1)
+      assert(PatternManager.getCheckpointBySlot(g, s) == atOrBefore, s"slot $s")
+      assert(PatternManager.getCheckpointBySlot(g, s, strict = true) ==
+        atOrBefore.filter(_._1 == s), s"strict slot $s")
+    }
+    // a strict hit opens the one segment whose slot range covers it
+    val covering = g.tableSlotRange("checkpoints", Some(slots.max), Some(slots.max)).inputFiles
+      .map(f => f.substring(0, f.lastIndexOf('/'))).distinct
+    assert(covering.length == 1, covering.mkString(", "))
   }
 
   test("R4: binary data point lookup") {
@@ -1199,6 +1218,29 @@ class IndexSpec extends SparkSpec {
     assert(ix.table("inputs").where(col("tx_id") === any).count() >= 1)
   }
 
+  /** The distributed sidecar probe — one SegmentBloomMightContain filter
+    * over the `segment_blooms` rows, all keys in one job — kept as the
+    * reference the driver-side probe must match: key → candidate paths. */
+  private def distributedCandidates(g: GraftIndex, m: GraftIndex.Manifest, keys: Seq[String],
+                                    segs: List[GraftIndex.Segment]): Map[String, List[String]] = {
+    import org.apache.spark.sql.graftshim.GraftShim
+    import spark.implicits._
+    val probe = spark.read.parquet(m.tables("segment_blooms").map(s => s"${g.root}/${s.path}"): _*)
+      .where(col("table_name") === "inputs" && col("column_name") === "tx_id")
+      .crossJoin(keys.toDF("key"))
+      .select(col("key"), col("segment_path"),
+        GraftShim.column(graft.expressions.SegmentBloomMightContain(
+          GraftShim.expression(col("bloom")),
+          GraftShim.expression(xxhash64(col("key"))))).as("hit"))
+      .collect()
+    keys.map { k =>
+      val hits = probe.filter(_.getString(0) == k).groupBy(_.getString(1)).map { case (p, rs) =>
+        p -> rs.exists(r => r.isNullAt(2) || r.getBoolean(2))
+      }
+      k -> segs.filter(s => hits.getOrElse(s.path, true)).map(_.path)
+    }.toMap
+  }
+
   test("segment_blooms sidecar: every write path maintains coverage; probe answers stay exact through mutations") {
     import graft.index.GraftIndex
     val g = new GraftIndex(spark, tmpDir("graft-sbloom"), vacuumGraceMs = 0L)
@@ -1223,7 +1265,32 @@ class IndexSpec extends SparkSpec {
         assert(pruned == full, s"[$when] key $k: pruned=$pruned full=$full")
       }
     }
+    // the driver-side probe returns EXACTLY the segment list the
+    // distributed SegmentBloomMightContain filter over the sidecar returns,
+    // for present and random absent keys, at every layout below
+    val rnd = new scala.util.Random(20261019L)
+    def assertSameProbe(when: String, m: GraftIndex.Manifest = g.manifest): Unit = {
+      val segs = m.tables("inputs")
+      assert(segs.size >= 2, s"[$when] the probe needs 2+ segments to engage")
+      val present = rnd.shuffle(g.table("inputs").select("tx_id").distinct()
+        .collect().map(_.getString(0)).toSeq).take(12)
+      val keys = present ++ Seq.fill(12)(Seq.fill(64)("0123456789abcdef"(rnd.nextInt(16))).mkString)
+      val reference = distributedCandidates(g, m, keys, segs)
+      keys.foreach { k =>
+        val driver = g.keyCandidates(m, "inputs", "tx_id", k, segs).map(_.map(_.path))
+        assert(driver.contains(reference(k)),
+          s"[$when] key $k: driver probe $driver, distributed filter ${reference(k)}")
+      }
+      // blooms never false-negative: a present key keeps its segment
+      present.foreach { k =>
+        val holders = g.table("inputs").where(col("tx_id") === k)
+          .select(input_file_name()).collect().map(_.getString(0))
+        assert(holders.forall(f => reference(k).exists(p => f.contains(s"/$p/"))),
+          s"[$when] key $k pruned away from its segment")
+      }
+    }
     assertCovered("after ingest"); assertExact("after ingest")
+    assertSameProbe("after ingest")
 
     // rollback rewrites straddling segments — their fresh sketches must
     // land in the same atomic bump
@@ -1231,9 +1298,30 @@ class IndexSpec extends SparkSpec {
       .collect().map(_.getLong(0)).drop(5).head
     Mutations.rollbackTo(g, mid)
     assertCovered("after rollback"); assertExact("after rollback")
+    assertSameProbe("after rollback")
+
+    // a manifest naming a segment the sidecar does not cover: both probes
+    // must keep it for every key (scanned conservatively)
+    val m0 = g.manifest
+    val uncovered = GraftIndex.Segment("inputs/seg-uncovered", Some(0L), Some(1L))
+    val withUncovered = m0.tables("inputs") :+ uncovered
+    val mUncovered = m0.copy(tables = m0.tables.updated("inputs", withUncovered))
+    assertSameProbe("uncovered segment", mUncovered)
+    assert(g.keyCandidates(mUncovered, "inputs", "tx_id", "f" * 64, withUncovered)
+      .exists(_.contains(uncovered)))
 
     // compaction merges segments (new sketch rows) AND, when compacting
-    // the sidecar itself, GCs rows for dead segments
+    // the sidecar itself, GCs rows for dead segments; two more appended
+    // segments first, so a partial compaction leaves 2+ to probe
+    def oneBlock(slot: Long, seed: Int) =
+      Indexer.ingest(g, FixtureChain.toDf(spark, Seq(FixtureChain.Blk(slot,
+        FixtureChain.hex32(seed), Seq(FixtureChain.Tx(FixtureChain.hex32(seed + 1), Nil,
+          Seq(FixtureChain.Out(FixtureChain.baseAddr(0, 0), 1L))))))), patterns)
+    oneBlock(800L, 515100); oneBlock(850L, 515200)
+    assert(g.manifest.tables("inputs").size >= 4)
+    assertSameProbe("after appends past the rollback")
+    g.compactSegments("inputs", maxSegments = 2)
+    assertCovered("after partial compact"); assertSameProbe("after partial compact")
     g.compactSegments("inputs", maxSegments = 1)
     assertCovered("after compact"); assertExact("after compact")
     val staleBefore = g.table("segment_blooms")
@@ -1246,6 +1334,9 @@ class IndexSpec extends SparkSpec {
     assert(rowsNow == liveNow,
       s"sidecar compaction should GC stale rows: $rowsNow vs live $liveNow (was $staleBefore rows)")
     assertCovered("after sidecar compact"); assertExact("after sidecar compact")
+    // a fresh append after the sidecar compaction: two sidecar segments again
+    oneBlock(900L, 515300)
+    assertSameProbe("after append to a compacted sidecar")
 
     // full-table replace (deleteInputs) re-covers the rewritten table
     Mutations.deleteInputs(g, Set[Pattern](Pattern.MatchDelegation("0" * 55 + "1")))
