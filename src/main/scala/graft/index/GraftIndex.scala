@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.Schemas
-import graft.expressions.SegmentBloomKernels
+import graft.expressions.{DriverLookup, DriverTable, SegmentBloomKernels}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -33,13 +33,15 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
                                 val vacuumGraceMs: Long,
                                 val manifestRetention: Int,
                                 pin: Option[GraftIndex.Manifest],
-                                memo: GraftIndex.ReadMemo) {
+                                memo: GraftIndex.ReadMemo,
+                                inlineMaxRows: Long) {
   import GraftIndex._
 
   def this(spark: SparkSession, root: String,
            vacuumGraceMs: Long = GraftIndex.DefaultVacuumGraceMs,
            manifestRetention: Int = 1) =
-    this(spark, root, vacuumGraceMs, manifestRetention, None, new GraftIndex.ReadMemo)
+    this(spark, root, vacuumGraceMs, manifestRetention, None, new GraftIndex.ReadMemo,
+      GraftIndex.InlineMaxRows)
 
   require(manifestRetention >= 1,
     s"manifestRetention must be >= 1, got $manifestRetention")
@@ -175,7 +177,7 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
     * vacuum through the facade fail loudly. None when v has aged out. */
   def asOf(version: Long): Option[GraftIndex] =
     asOfVersion(version).map(m =>
-      new GraftIndex(spark, root, vacuumGraceMs, manifestRetention, Some(m), memo))
+      new GraftIndex(spark, root, vacuumGraceMs, manifestRetention, Some(m), memo, inlineMaxRows))
 
   /** ONE manifest read per QUERY: a read-only facade pinned to the manifest
     * as of NOW. The snapshot-isolation contract ("readers pin one manifest")
@@ -189,15 +191,21 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
     * Fails loudly (run-migrate wording, not the historical-snapshot one)
     * when the index needs migration; the concurrent-writer grace story is
     * unchanged (vacuum's grace window protects in-flight pinned readers).
-    * The facade shares this index's read memos (tip, decoded sketches).
+    * The facade shares this index's read memos (tip, decoded rows).
     * Idempotent on an already-pinned facade. */
   def pinned: GraftIndex =
     if (pin.isDefined) this
     else {
       val m = manifest
       requireCurrentSchema(m, "pinning a query snapshot")
-      new GraftIndex(spark, root, vacuumGraceMs, manifestRetention, Some(m), memo)
+      new GraftIndex(spark, root, vacuumGraceMs, manifestRetention, Some(m), memo, inlineMaxRows)
     }
+
+  /** Test seam: this index (same pin, same memos) with another bound on
+    * the tables [[checkpointsMemo]] and [[reconcileRead]] inline — a bound
+    * of 0 forces every read onto the join paths. */
+  private[graft] def withInlineMaxRows(n: Long): GraftIndex =
+    new GraftIndex(spark, root, vacuumGraceMs, manifestRetention, pin, memo, n)
 
   /** TIME TRAVEL (`manifestRetention` > 1): every commit also writes its
     * manifest as `.manifest-v<version>.json` and keeps the newest
@@ -410,7 +418,7 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
     * the kernel the [[graft.expressions.SegmentBloomMightContain]]
     * expression evaluates ([[SegmentBloomKernels]] over `xxhash64(key)`,
     * seed 42), against sketches cached per sidecar segment (see
-    * [[sketchesOf]]). A distributed filter over the sidecar would cost a
+    * [[decodedRows]]). A distributed filter over the sidecar would cost a
     * job — ~60–100 ms of scheduling — per point read, to answer a question
     * whose inputs only change at a commit. */
   private[graft] def keyCandidates(m: Manifest, name: String, column: String,
@@ -430,36 +438,95 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
     Some(segs.filter(s => hits.getOrElse(s.path, true))) // uncovered → scan
   }
 
-  /** Decoded sketch rows of the given `segment_blooms` segments. Segments
-    * are immutable, so a sidecar segment's decoded rows are cached by its
-    * path for as long as it stays in the manifest: the first read after a
-    * commit decodes only the sidecar segments that commit added, all of
-    * them in ONE job, and every later probe is driver-only. Loading is
-    * lazy, on the read path — commits never pay it. Entries whose sidecar
-    * segment left the probed manifest (compaction, rollback) are dropped
-    * at the next load. A racing facade on another manifest may evict an
-    * entry this probe wanted: its rows are then absent, and absent rows
-    * mean "scan" — slower, never wrong. */
-  private def sketchesOf(bloomSegs: List[Segment]): Seq[Sketch] = {
-    val cache = memo.sketches
-    val missing = bloomSegs.filterNot(s => cache.containsKey(s.path))
-    if (missing.nonEmpty) {
-      val live = bloomSegs.iterator.map(_.path).toSet
-      cache.keySet.removeIf(p => !live(p))
-      // every file lies at <root>/segment_blooms/<segdir>/<file>: the two
-      // directories above the file name ARE the manifest's segment path
-      val loaded = readSegments("segment_blooms", missing)
-        .select(regexp_extract(input_file_name(), "/([^/]+/[^/]+)/[^/]+$", 1),
-          col("table_name"), col("column_name"), col("segment_path"), col("bloom"))
-        .collect()
-        .groupBy(_.getString(0))
-      missing.foreach { s =>
-        cache.put(s.path, loaded.getOrElse(s.path, Array.empty).toSeq.map(r =>
-          Sketch(r.getString(1), r.getString(2), r.getString(3),
-            Option(r.getAs[Array[Byte]](4)).map(SegmentBloomKernels.decode))))
-      }
+  /** Decoded sketch rows of the given `segment_blooms` segments, from
+    * [[decodedRows]]. */
+  private def sketchesOf(bloomSegs: List[Segment]): Seq[Sketch] =
+    decodedRows("segment_blooms", memo.sketchRows, bloomSegs,
+        Seq("table_name", "column_name", "segment_path", "bloom")) { r =>
+      Sketch(r.getString(1), r.getString(2), r.getString(3),
+        Option(r.getAs[Array[Byte]](4)).map(SegmentBloomKernels.decode))
     }
-    bloomSegs.flatMap(s => Option(cache.get(s.path)).getOrElse(Nil))
+
+  /** The rows of `segs` (segments of `table`), read as `cols` and decoded
+    * in the driver. Segments are immutable, so a segment's decoded rows are
+    * cached in `cache` (the table's own) by its path for as long as it
+    * stays in the manifest: the first read after a commit decodes only the
+    * segments that commit added, all of them in ONE job, and every later
+    * read is driver-only. Loading is lazy, on the read path — commits
+    * never pay it. Entries whose segment left the probed manifest
+    * (compaction, rollback) are dropped at the next load, or as soon as the
+    * cache holds more entries than the manifest has segments. The answer
+    * is assembled from the entries seen before that prune plus the rows
+    * just loaded, so a racing facade on another manifest can cost a
+    * reload, never a row. `decode` sees the segment path at column 0 and
+    * `cols` from column 1 on. */
+  private def decodedRows[A](table: String, cache: SegmentRows[A], segs: List[Segment],
+                             cols: Seq[String])(decode: org.apache.spark.sql.Row => A): Seq[A] = {
+    val seen = segs.map(s => s.path -> Option(cache.get(s.path)))
+    val missing = segs.zip(seen).collect { case (s, (_, None)) => s }
+    if (missing.nonEmpty || cache.size > segs.size) {
+      val live = segs.iterator.map(_.path).toSet
+      cache.keySet.removeIf(p => !live(p))
+    }
+    val loaded: Map[String, Seq[A]] =
+      if (missing.isEmpty) Map.empty
+      else {
+        // every file lies at <root>/<table>/<segdir>/<file>: the two
+        // directories above the file name ARE the manifest's segment path
+        val byPath = readSegments(table, missing)
+          .select(regexp_extract(input_file_name(), "/([^/]+/[^/]+)/[^/]+$", 1) +:
+            cols.map(col): _*)
+          .collect()
+          .groupBy(_.getString(0))
+        missing.map { s =>
+          val rows = byPath.getOrElse(s.path, Array.empty).toSeq.map(decode)
+          cache.put(s.path, rows)
+          s.path -> rows
+        }.toMap
+      }
+    seen.flatMap { case (p, hit) => hit.getOrElse(loaded(p)) }
+  }
+
+  /** Live rows of `segs` by manifest stats, saturating; a segment without
+    * the stat counts as unbounded. */
+  private[graft] def statRows(segs: List[Segment]): Long =
+    segs.foldLeft(0L) { (a, s) =>
+      math.min(Long.MaxValue / 4, a + s.rows.getOrElse(Long.MaxValue / 4)) }
+
+  /** Live `inputs` rows, by manifest stats, in the segments whose slot
+    * stats meet [lo, hi] — the segments a slot-windowed read scans. */
+  private[graft] def inputsRowsInSlotRange(lo: Option[Long], hi: Option[Long]): Long =
+    statRows(segmentsInSlotRange(manifest.tables.getOrElse("inputs", Nil), lo, hi))
+
+  /** The live checkpoints in the driver ([[Checkpoints]]), decoded once
+    * per segment ([[decodedRows]]) and assembled once per checkpoints
+    * segment list — what F4's header-hash resolution and
+    * `/checkpoints/{slot}` answer from without a Spark job. None when the
+    * table may hold more than [[InlineMaxRows]] rows (checkpoints grow
+    * with chain length; above the bound the reads keep their segment-pruned
+    * scans and threshold-gated joins, and the memo lets its rows go), or
+    * when a slot repeats: a join multiplies rows on a duplicate slot, a
+    * table cannot. */
+  private[graft] def checkpointsMemo: Option[Checkpoints] = {
+    val m = manifest
+    requireCurrentSchema(m, "reading checkpoints")
+    val segs = m.tables.getOrElse("checkpoints", Nil)
+    if (statRows(segs) > inlineMaxRows) {
+      memo.checkpoints = None
+      memo.checkpointRows.clear()
+      None
+    } else memo.checkpoints match {
+      case Some((key, cps)) if key == segs => cps
+      case _ =>
+        val rows = decodedRows("checkpoints", memo.checkpointRows, segs,
+          Seq("slot_no", "header_hash"))(r => (r.getLong(1), r.getString(2)))
+        val bySlot = scala.collection.immutable.TreeMap.from(rows)
+        val cps = if (bySlot.size < rows.size) None else Some(Checkpoints(bySlot,
+          DriverTable(bySlot.toSeq.map { case (slot, hash) => Seq(slot) -> hash },
+            org.apache.spark.sql.types.StringType)))
+        memo.checkpoints = Some((segs, cps))
+        cps
+    }
   }
 
   /** R8 selectMaxCheckpoint — the most recent checkpoint, memoized by the
@@ -958,7 +1025,10 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
     * shuffled join — Catalyst/AQE pick the strategy from real sizes —
     * instead of an executor OOM three stages away from the cause. A
     * segment missing its row stat (pre-v2-stat manifest) counts as
-    * unbounded, which fails safe to the shuffle path. */
+    * unbounded, which fails safe to the shuffle path.
+    *
+    * This is the path for scans of any size (views, compaction, counts);
+    * the HTTP read routes use [[reconcileRead]]. */
   def reconcile(in: DataFrame): DataFrame = {
     val spendSegs = manifest.tables.getOrElse("spends", Nil)
     if (spendSegs.isEmpty) return in
@@ -978,13 +1048,63 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
           .withColumnsRenamed(renames))
       else
         table("spends").dropDuplicates(dedupKeys).withColumnsRenamed(renames)
-    in.join(sp, Seq("tx_id", "output_index"), "left_outer")
-      .select(
-        in.columns.filterNot(Set("spent_at", "spent_by", "spent_with")).map(col) ++ Seq(
-          coalesce(col("d_spent_at"), col("spent_at")).as("spent_at"),
-          coalesce(col("d_spent_by"), col("spent_by")).as("spent_by"),
-          coalesce(col("d_spent_with"), col("spent_with")).as("spent_with")): _*)
+    withMarks(in.join(sp, Seq("tx_id", "output_index"), "left_outer"), in.columns,
+      col("d_spent_at"), col("d_spent_by"), col("d_spent_with"))
   }
+
+  /** [[reconcile]] for a read route, with no Spark job of its own: when the
+    * delta holds at most [[InlineMaxRows]] rows by manifest stats, its
+    * marks come from the decoded-rows memo ([[decodedRows]]) as a
+    * [[DriverTable]] keyed by (tx_id, output_index), probed per row. A
+    * broadcast would rebuild the same few rows in a job per read, though
+    * they change only at a commit; a join against a local relation still
+    * plans a broadcast exchange, which is a job as well. With `txKey` (a
+    * read whose rows all carry that tx_id) the table holds only that
+    * transaction's marks.
+    *
+    * Same answer as the join: the join dedups the delta per key, so a key
+    * whose marks differ has no single answer, and such a delta keeps the
+    * join. Above the bound it keeps the join too. */
+  private[graft] def reconcileRead(in: DataFrame, txKey: Option[String]): DataFrame = {
+    val spendSegs = manifest.tables.getOrElse("spends", Nil)
+    if (spendSegs.isEmpty || statRows(spendSegs) > inlineMaxRows) {
+      memo.spendRows.clear() // no read of this delta uses the memo
+      return if (spendSegs.isEmpty) in else reconcile(in)
+    }
+    inlineSpends(spendSegs, txKey) match {
+      case None                           => reconcile(in)
+      case Some(marks) if marks.size == 0 => in
+      case Some(marks)                    =>
+        val d = DriverLookup.column(marks, SpendMarkType, col("tx_id"), col("output_index"))
+        withMarks(in, in.columns,
+          d.getField("spent_at"), d.getField("spent_by"), d.getField("spent_with"))
+    }
+  }
+
+  /** The delta's marks by (tx_id, output_index), limited to `txKey`'s
+    * transaction; None when one key carries two different marks. */
+  private def inlineSpends(segs: List[Segment], txKey: Option[String]): Option[DriverTable] = {
+    val marks = decodedRows("spends", memo.spendRows, segs,
+        Seq("tx_id", "output_index", "spent_at", "spent_by", "spent_with")) { r =>
+      SpendMark(r.getString(1), r.getInt(2),
+        org.apache.spark.sql.Row(r.getLong(3), r.getStruct(4), r.getString(5)))
+    }
+    val byKey = txKey.fold(marks)(t => marks.filter(_.txId == t))
+      .groupMap(s => Seq(s.txId, s.outputIndex))(_.mark)
+    if (byKey.valuesIterator.exists(_.distinct.size > 1)) None
+    else Some(DriverTable(byKey.map { case (k, v) => k -> v.head }, SpendMarkType))
+  }
+
+  /** `in`'s columns with the spend columns last, each taken from the mark
+    * where there is one — the merge both reconcile paths share. */
+  private def withMarks(df: DataFrame, inCols: Array[String], at: org.apache.spark.sql.Column,
+                        by: org.apache.spark.sql.Column,
+                        wth: org.apache.spark.sql.Column): DataFrame =
+    df.select(
+      inCols.filterNot(Set("spent_at", "spent_by", "spent_with")).map(col) ++ Seq(
+        coalesce(at, col("spent_at")).as("spent_at"),
+        coalesce(by, col("spent_by")).as("spent_by"),
+        coalesce(wth, col("spent_with")).as("spent_with")): _*)
 
   /** Manifest-stat gate shared by [[reconcile]] and [[markedBucketRanges]]:
     * does the spends delta provably fit the forced broadcast? Row counts
@@ -999,8 +1119,7 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
   private def spendsDeltaFitsBroadcast(segs: List[Segment]): Boolean = {
     val maxRows = GraftIndex.positiveLongConf(spark,
       "spark.graft.spends.broadcastMaxRows", DefaultSpendsBroadcastMaxRows)
-    val rows = segs.foldLeft(0L) { (a, s) =>
-      math.min(Long.MaxValue / 4, a + s.rows.getOrElse(Long.MaxValue / 4)) }
+    val rows = statRows(segs)
     val fits = rows <= maxRows
     if (!fits)
       System.err.println(s"[graft] spends delta at $root holds ~$rows rows " +
@@ -1284,6 +1403,27 @@ object GraftIndex {
     * Override per-session via `spark.graft.spends.broadcastMaxRows`. */
   val DefaultSpendsBroadcastMaxRows: Long = 1000000L
 
+  /** Ceiling (rows, from manifest stats) on a checkpoints table or spends
+    * delta that the read routes resolve in the driver instead of joining
+    * ([[GraftIndex.checkpointsMemo]], [[GraftIndex.reconcileRead]]). A
+    * [[DriverTable]] is probed by hash, so a looked-up row costs the same
+    * at any size; what grows is the task each read ships its tables in
+    * (Java-serialized with the plan, then deserialized by the task), and
+    * the rows the driver keeps decoded. Measured on 4 cores (`local[4]`,
+    * both tables at N entries, driver lookups vs broadcast joins, one-
+    * partition sorted read of 100 / 1000 looked-up rows, median of 9):
+    * N = 6144: 389 vs 822 / 387 vs 744 ms; N = 16384: 746 vs 712 /
+    * 742 vs 678 (a second run: 760 vs 883 / 671 vs 693); N = 65536: 3138
+    * vs 783; N = 262144: 15944 vs 1115 — mostly the spend marks, whose
+    * nested rows deserialize slowest (at 65536 the checkpoints table
+    * alone added ~370 ms). The crossover is near 16k; the bound is the
+    * largest measured size that still wins clearly. */
+  val InlineMaxRows: Long = 6144L
+
+  /** A spend mark's type, the value of the spends [[DriverTable]]. */
+  private val SpendMarkType =
+    org.apache.spark.sql.types.StructType(Schemas.spendsType.fields.drop(2))
+
   /** Per-segment max(spent_at) stat — `Unknown` (pre-upgrade manifests: must
     * be rewritten conservatively on rollback), `NoneSpent` (no spent rows),
     * or `MaxAt` (rollback to s can skip the segment iff max ≤ s). */
@@ -1341,19 +1481,35 @@ object GraftIndex {
     "scripts"     -> Seq("script_hash"))
 
   /** Driver-side read state one index shares with every facade it hands
-    * out ([[GraftIndex.pinned]], [[GraftIndex.asOf]]). Both entries are
+    * out ([[GraftIndex.pinned]], [[GraftIndex.asOf]]). Every entry is
     * keyed by immutable segment identity, so nothing ever invalidates them;
     * they are only replaced or pruned. */
   private[index] final class ReadMemo {
     /** checkpoints segment list → its most recent checkpoint. */
     @volatile var tip: Option[(List[Segment], Option[(Long, String)])] = None
-    /** `segment_blooms` segment path → its decoded sketch rows. */
-    val sketches = new java.util.concurrent.ConcurrentHashMap[String, Seq[Sketch]]
+    /** checkpoints segment list → [[GraftIndex.checkpointsMemo]]'s answer. */
+    @volatile var checkpoints: Option[(List[Segment], Option[Checkpoints])] = None
+    /** Per table, segment path → its decoded rows ([[GraftIndex.decodedRows]]). */
+    val sketchRows = new SegmentRows[Sketch]
+    val checkpointRows = new SegmentRows[(Long, String)]
+    val spendRows = new SegmentRows[SpendMark]
   }
+
+  private[index] type SegmentRows[A] = java.util.concurrent.ConcurrentHashMap[String, Seq[A]]
 
   /** One decoded `segment_blooms` row; `bloom` None = null sketch. */
   private[index] final case class Sketch(table: String, column: String, segment: String,
                                          bloom: Option[org.apache.spark.util.sketch.BloomFilter])
+
+  /** One decoded `spends` row; `mark` holds spent_at, spent_by, spent_with. */
+  private[index] final case class SpendMark(txId: String, outputIndex: Int,
+                                            mark: org.apache.spark.sql.Row)
+
+  /** The live checkpoints, held in the driver: `bySlot` for
+    * `/checkpoints/{slot}`, `table` (slot → header hash) for F4's per-row
+    * lookup. */
+  final case class Checkpoints(bySlot: scala.collection.immutable.SortedMap[Long, String],
+                               table: DriverTable)
 
   /** The probe key's hash: Catalyst's own `xxhash64` (seed 42) evaluated in
     * the driver — the exact expression [[bloomAggColumn]] folds into every

@@ -114,22 +114,30 @@ object PatternManager {
 
   /** R10 GET /checkpoints/{slot}?strict (Http.hs:557-581): greatest
     * checkpoint at-or-before the slot (listAncestorsDesc(slot+1, 1)); strict
-    * mode requires an exact hit. Both read only the segments whose slot
-    * stats allow an answer: strict equality-probes the segments whose
-    * [min, max] contains the slot (one task on a slot-ordered index, not
-    * one per segment), non-strict skips the segments starting after it.
-    * Each is one job: the equality collects its (duplicate-only) rows
-    * whole, where a `limit(1)` would scan partition by partition and pay a
-    * second job whenever the first partition misses. */
-  def getCheckpointBySlot(ix: GraftIndex, slot: Long, strict: Boolean = false): Option[(Long, String)] = {
-    val hit =
-      if (strict)
-        ix.tableSlotRange("checkpoints", Some(slot), Some(slot))
-          .where(col("slot_no") === slot)
-      else
-        ix.tableSlotRange("checkpoints", None, Some(slot))
-          .where(col("slot_no") <= slot).orderBy(col("slot_no").desc).limit(1)
-    hit.collect().headOption.map(r => (r.getLong(0), r.getString(1)))
+    * mode requires an exact hit. Under the inline bound both answer from
+    * the checkpoints memo ([[GraftIndex.checkpointsMemo]]) with no Spark
+    * job. Above it they read only the segments whose slot stats allow an
+    * answer: strict equality-probes the segments whose [min, max] contains
+    * the slot (one task on a slot-ordered index, not one per segment),
+    * non-strict skips the segments starting after it. Each is one job: the
+    * equality collects its (duplicate-only) rows whole, where a `limit(1)`
+    * would scan partition by partition and pay a second job whenever the
+    * first partition misses. */
+  def getCheckpointBySlot(ix0: GraftIndex, slot: Long, strict: Boolean = false): Option[(Long, String)] = {
+    val ix = ix0.pinned
+    ix.checkpointsMemo match {
+      case Some(cps) =>
+        if (strict) cps.bySlot.get(slot).map(slot -> _) else cps.bySlot.rangeTo(slot).lastOption
+      case None =>
+        val hit =
+          if (strict)
+            ix.tableSlotRange("checkpoints", Some(slot), Some(slot))
+              .where(col("slot_no") === slot)
+          else
+            ix.tableSlotRange("checkpoints", None, Some(slot))
+              .where(col("slot_no") <= slot).orderBy(col("slot_no").desc).limit(1)
+        hit.collect().headOption.map(r => (r.getLong(0), r.getString(1)))
+    }
   }
 
   def currentPatterns(ix: GraftIndex): Set[Pattern] =

@@ -14,9 +14,11 @@ import org.apache.spark.sql.DataFrame
   * of rows at any moment — never O(result). Upstream exchanges (the sort
   * shuffle of F6) run once and are reused across the per-partition jobs,
   * so the incremental fetch costs one extra job-floor per partition, not
-  * a re-execution. A tx-keyed result ([[FoldInputs]] with a transaction
-  * key) is sorted in a single partition, so it has no sort shuffle and
-  * fetches in ONE job. The rows themselves are [[FoldInputs.asJson]] — the
+  * a re-execution. A small [[FoldInputs]] result (tx-keyed, or address/
+  * policy-windowed over few rows) is sorted in a single partition and
+  * resolves its checkpoints and spend marks by driver lookups, so it has
+  * no sort shuffle and no broadcast and fetches in ONE job. The
+  * rows themselves are [[FoldInputs.asJson]] — the
   * byte-exact resultToJson mirror — so this shim composes the existing
   * encoder with the fetch discipline; an HTTP layer would write each
   * string to the chunked response stream as it arrives. */

@@ -280,9 +280,10 @@ class HttpApiSpec extends SparkSpec {
     }
   }
 
-  test("job budget per read: tx lookup <= 3 jobs, absent key 0, strict checkpoint 1, repeated health 0") {
+  test("job budget per read: present tx <= 1 job, absent tx 0, address <= 2, checkpoint by slot 0, repeated health 0") {
     // three+ inputs segments and a non-empty spends delta: the shape where
-    // the sidecar probe engages and the delta joins every tx lookup
+    // the sidecar probe and the address window engage and the delta
+    // reconciles every read
     val ix = new GraftIndex(spark, tmpDir("graft-http-budget"))
     val ps = Set[Pattern](Pattern.MatchAny(includingBootstrap = true))
     blocks.grouped(3).foreach(b => Indexer.ingest(ix, FixtureChain.toDf(spark, b), ps))
@@ -292,6 +293,8 @@ class HttpApiSpec extends SparkSpec {
     val tx = ix.table("inputs").select("tx_id").head().getString(0)
     val absent = Iterator.from(1).map(i => f"$i%064x")
       .find(k => ix.keyCandidates(m, "inputs", "tx_id", k, segs).exists(_.isEmpty)).get
+    val cred = ix.table("inputs").where(org.apache.spark.sql.functions.col("payment_credential")
+      .isNotNull).select("payment_credential").head().getString(0)
     val slot = ix.table("checkpoints").select("slot_no").head().getLong(0)
     val api = new graft.query.HttpApi(ix, () => blocksDf,
       () => Health.snapshot(ix, Health.ConnectionStatus.Connected))
@@ -303,19 +306,23 @@ class HttpApiSpec extends SparkSpec {
         assert(r.statusCode() == 200, s"$path: ${r.body()}")
         descs
       }
-      // the first reads decode the sidecar and memoize the tip
+      // the first reads decode the sidecar, the checkpoints and the spends
+      // delta, and memoize the tip
       jobs(s"/matches/*@$tx"); jobs("/health")
 
       val present = jobs(s"/matches/*@$tx")
-      assert(present.size <= 3, s"present tx lookup ran ${present.size} jobs")
-      assert(present.forall(_ == "GET /matches/{pattern}"), present)
+      assert(present == Seq("GET /matches/{pattern}"), present)
       assert(get(s"$base/matches/*@$tx").body().contains(tx))
       val miss = jobs(s"/matches/*@$absent")
       assert(miss.isEmpty, s"absent tx lookup ran ${miss.size} jobs")
       assert(get(s"$base/matches/*@$absent").body() == "[]")
-      val strict = jobs(s"/checkpoints/$slot?strict")
-      assert(strict == Seq("GET /checkpoints/{slot}"), strict)
-      assert(jobs(s"/checkpoints/${slot + 1}?strict").size <= 1)
+      val address = jobs(s"/matches/$cred/*")
+      assert(address.size <= 2 && address.forall(_ == "GET /matches/{pattern}"), address)
+      assert(get(s"$base/matches/$cred/*").body().contains(cred))
+      Seq(s"$slot?strict", s"${slot + 1}?strict", s"${slot + 1}").foreach { p =>
+        assert(jobs(s"/checkpoints/$p").isEmpty, s"/checkpoints/$p ran jobs")
+      }
+      assert(get(s"$base/checkpoints/$slot?strict").body().contains(s""""slot_no":$slot"""))
       assert(jobs("/health").isEmpty)
     } finally server.stop(0)
   }
