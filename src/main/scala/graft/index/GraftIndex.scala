@@ -202,8 +202,9 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
     }
 
   /** Test seam: this index (same pin, same memos) with another bound on
-    * the tables [[checkpointsMemo]] and [[reconcileRead]] inline — a bound
-    * of 0 forces every read onto the join paths. */
+    * the tables [[checkpointsMemo]], [[addressStatsMemo]] and
+    * [[reconcileRead]] inline — a bound of 0 forces every read onto the
+    * join paths and the Spark-side window probes. */
   private[graft] def withInlineMaxRows(n: Long): GraftIndex =
     new GraftIndex(spark, root, vacuumGraceMs, manifestRetention, pin, memo, n)
 
@@ -510,7 +511,11 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
   private[graft] def checkpointsMemo: Option[Checkpoints] = {
     val m = manifest
     requireCurrentSchema(m, "reading checkpoints")
-    val segs = m.tables.getOrElse("checkpoints", Nil)
+    checkpointsOf(m.tables.getOrElse("checkpoints", Nil))
+  }
+
+  /** [[checkpointsMemo]] over one checkpoints segment list. */
+  private def checkpointsOf(segs: List[Segment]): Option[Checkpoints] =
     if (statRows(segs) > inlineMaxRows) {
       memo.checkpoints = None
       memo.checkpointRows.clear()
@@ -527,16 +532,18 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
         memo.checkpoints = Some((segs, cps))
         cps
     }
-  }
 
   /** R8 selectMaxCheckpoint — the most recent checkpoint, memoized by the
     * live checkpoints segment list. Every routed HTTP read asks for it (the
     * health snapshot behind the ETag), and the answer depends on nothing
     * but that list: segments are immutable, and any commit or rollback
     * that changes checkpoints changes the list, so the memo is exact. A
-    * miss reads only the segments whose max-slot stat can hold the tip.
-    * One volatile slot, shared with every facade of this index: racing
-    * misses each store a correct (list, answer) pair. */
+    * miss takes the last entry of [[checkpointsMemo]] when it applies — the
+    * one job that decodes a commit's new segment then also serves the next
+    * resume and `/checkpoints` — and otherwise reads only the segments
+    * whose max-slot stat can hold the tip. One volatile slot, shared with
+    * every facade of this index: racing misses each store a correct
+    * (list, answer) pair. */
   def maxCheckpoint: Option[(Long, String)] = {
     val m = manifest
     requireCurrentSchema(m, "reading checkpoints")
@@ -544,13 +551,36 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
     memo.tip match {
       case Some((key, tip)) if key == segs => tip
       case _ =>
-        val top = segs.flatMap(_.maxSlot).maxOption
-        val holders = segs.filter(s => s.maxSlot.isEmpty || s.maxSlot == top)
-        val tip = readSegments("checkpoints", holders).orderBy(col("slot_no").desc).limit(1)
-          .collect().headOption.map(r => (r.getLong(0), r.getString(1)))
+        val tip = checkpointsOf(segs) match {
+          case Some(cps) => cps.bySlot.lastOption
+          case None =>
+            val top = segs.flatMap(_.maxSlot).maxOption
+            val holders = segs.filter(s => s.maxSlot.isEmpty || s.maxSlot == top)
+            readSegments("checkpoints", holders).orderBy(col("slot_no").desc).limit(1)
+              .collect().headOption.map(r => (r.getLong(0), r.getString(1)))
+        }
         memo.tip = Some((segs, tip))
         tip
     }
+  }
+
+  /** The live `address_stats` rows in the driver, decoded once per segment
+    * ([[decodedRows]]) — what an address read's slot window folds over
+    * without a Spark job (`FoldInputs.addressWindow`). None when the table
+    * may hold more than the inline bound ([[InlineMaxRows]]): it grows by
+    * one row per address per commit, and above the bound the window keeps
+    * its one-job probe and the memo lets its rows go. */
+  private[graft] def addressStatsMemo: Option[Seq[AddressStat]] = {
+    val m = manifest
+    requireCurrentSchema(m, "reading address_stats")
+    val segs = m.tables.getOrElse("address_stats", Nil)
+    if (statRows(segs) > inlineMaxRows) {
+      memo.addressRows.clear()
+      None
+    } else Some(decodedRows("address_stats", memo.addressRows, segs,
+        Seq("address", "payment_credential", "min_slot", "max_slot")) { r =>
+      AddressStat(r.getString(1), Option(r.getString(2)), r.getLong(3), r.getLong(4))
+    })
   }
 
   /** A segment with a non-nullable stat column and no stats is provably
@@ -699,34 +729,38 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
     * manifest, exposing partial batches). Empty frames register nothing
     * (M9). A no-op change set does not bump the version.
     *
-    * The segment writes run SEQUENTIALLY by default, deliberately. A
-    * previous revision ran them concurrently from a thread pool to overlap
-    * six job-floor latencies, but the six frames of one batch share
-    * subtrees of a single expression tree (MatchBlock derives them all
-    * from one parse), and driver-side optimization is not safe to run
-    * concurrently over plans sharing STATEFUL expression instances —
-    * `ConvertToLocalRelation` evaluates projections eagerly during
-    * optimization, and a shared `from_json` parser evaluated from six
-    * optimizer threads at once produced garbled rows (zeroed fields,
-    * lost/duplicated outputs; reproduced reliably by IngestStressSpec,
-    * clean when serialized). Five saved job floors are not worth a
-    * correctness race; the big segment write dominates wall-clock at scale
-    * anyway.
+    * The segment writes run SEQUENTIALLY by default. Driver-side
+    * optimization is not safe to run concurrently over plans that share
+    * STATEFUL expression instances the optimizer evaluates:
+    * `ConvertToLocalRelation` and constant folding evaluate expressions
+    * over literal rows eagerly, and a shared `from_json` parser evaluated
+    * from six optimizer threads at once produced garbled rows (zeroed
+    * fields, lost/duplicated outputs; reproduced by IngestStressSpec when
+    * the frames of one unmaterialized batch were written concurrently).
     *
-    * `concurrentWrites = true` opts back into the overlap for call sites
-    * whose frames provably share NO stateful expression instances — frames
-    * derived from parquet read-backs, localCheckpointed RDDs, or literal
-    * local relations (copyFiltered's side-table prunes, rollback's
-    * straddling-segment rewrites). The caller asserts that property; the
-    * atomic single-manifest-bump semantics are unchanged (all writes
-    * complete before the one commit, any failure aborts the whole batch
-    * with no manifest change). */
+    * `concurrentWrites = true` overlaps the writes (up to four at a time)
+    * for frames built ONLY from materialized relations — cached or
+    * checkpointed rows, parquet segments, and literal rows no
+    * single-input operator computes over — whose expressions the
+    * optimizer never evaluates
+    * (`Indexer.ingest` over its materialized batch, copyFiltered's
+    * side-table prunes, rollback's straddling-segment rewrites). This is
+    * checked, not assumed: a frame of any other shape fails the commit
+    * before anything is written, naming its table
+    * ([[GraftIndex.requireMaterialized]]). The atomic single-manifest-bump
+    * semantics are unchanged (all writes complete before the one commit,
+    * any failure aborts the whole batch with no manifest change). */
   def commitAll(appends: Map[String, DataFrame] = Map.empty,
                 replaces: Map[String, DataFrame] = Map.empty,
                 replaceKeeping: Map[String, (List[Segment], Option[DataFrame])] = Map.empty,
                 staged: Map[String, List[Segment]] = Map.empty,
                 concurrentWrites: Boolean = false)
       : Unit = {
+    val concurrent = concurrentWrites &&
+      appends.size + replaces.size + replaceKeeping.count(_._2._2.isDefined) > 1
+    if (concurrent)
+      (appends.toSeq ++ replaces ++ replaceKeeping.collect { case (t, (_, Some(df))) => t -> df })
+        .foreach { case (t, df) => requireMaterialized(t, df) }
     val m = manifest
     val v = m.version + 1
     // (table, base segments to keep, whether a missing write keeps the base)
@@ -742,11 +776,11 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
           () => (t, kept, false, df.flatMap(writeSegment(t, _, v)))
         }
     val results: Seq[(String, List[Segment], Boolean, Option[Segment])] =
-      if (!concurrentWrites || tasks.size <= 1) tasks.map(_())
+      if (!concurrent) tasks.map(_())
       else {
         // fresh threads per commit: they inherit the caller's Spark local
-        // properties (scheduler pool, job description) at creation, and a
-        // mutation commit is rare enough that pool reuse buys nothing
+        // properties (scheduler pool, job description) at creation; a
+        // thread costs far less than the write job it runs
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(tasks.size, 4))
         try {
@@ -817,6 +851,8 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
     // two-level pruning for slot-range scans (no directory partitioning —
     // multi-segment reads stay trivial and small batches don't explode into
     // thousands of tiny partition dirs)
+    lazy val small: Boolean = out.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      GraftIndex.positiveLongConf(spark, "spark.graft.write.rangeMinBytes", 8L << 20)
     val clustered =
       if (table == "inputs") {
         // RANGE partitioning on created_at, not hash on created_bucket:
@@ -848,24 +884,32 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
         // matters, not at the raw-bytes scale. 8 MB keeps every
         // micro-batch and copy-sized rewrite on the one-file path while
         // corpus-scale builds range exactly as before.
-        val rangeMin = GraftIndex.positiveLongConf(spark,
-          "spark.graft.write.rangeMinBytes", 8L << 20)
-        if (out.queryExecution.optimizedPlan.stats.sizeInBytes <= rangeMin)
+        if (small)
           (out.repartition(1)
             .sortWithinPartitions(col("created_at"), col("address")), true)
         else
           (out.repartitionByRange(col("created_at"))
             .sortWithinPartitions(col("created_at"), col("address")), false)
       }
-      else if (table == "policies")
-        // slot-sorted within whatever partitioning the producer chose: no
-        // extra shuffle, but row-group min/max stats on created_at line up
-        // for slot-scoped scans of the side table
-        (out.sortWithinPartitions(col("created_at"), col("policy_id")), false)
-      else if (table == "address_stats")
-        // address-sorted: prefix probes (P5/P6 delegation part) prune row
-        // groups via min/max; exact probes use the bloom/dictionary
-        (out.sortWithinPartitions(col("address")), false)
+      else if (SideTables(table)) {
+        // policies slot-sorted (row-group min/max stats on created_at line
+        // up for slot-scoped scans of the side table), address_stats
+        // address-sorted (prefix probes — the P5/P6 delegation part — prune
+        // row groups via min/max; exact probes use the bloom/dictionary).
+        // Their producers deduplicate or aggregate, i.e. shuffle, and AQE
+        // runs that shuffle as a job of its own: a small frame takes the
+        // inputs cut-over above — one partition, one file, one job, the
+        // shuffle's reduce side folded into the writing task — and a large
+        // one keeps whatever partitioning its producer chose.
+        val sortCols = table match {
+          case "policies"      => Seq("created_at", "policy_id")
+          case "address_stats" => Seq("address")
+          case _               => Nil
+        }
+        val placed = if (small) out.coalesce(1) else out
+        (if (sortCols.isEmpty) placed else placed.sortWithinPartitions(sortCols.map(col): _*),
+          small)
+      }
       else
         // the bloom sidecar is ≤ one row per written segment — nothing for
         // AQE to adapt, so it skips the per-stage job tax too
@@ -919,14 +963,9 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
     val writer = bloomDictColumns(table).foldLeft(hashBloomed) { (w, c) =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true")
     }
-    // labeled write jobs (guide §1.5) — scoped so a caller's own description
-    // (the bench labels per query) is restored afterwards; concurrent
-    // commitAll threads each carry their own local properties
-    val sc = spark.sparkContext
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"graft.write $path")
-    try writer.parquet(s"$root/$path")
-    finally sc.setJobDescription(prevDesc)
+    // labeled write jobs (guide §1.5); concurrent commitAll threads each
+    // carry their own local properties
+    describedAs(spark, s"graft.write $path")(writer.parquet(s"$root/$path"))
     val row: Map[String, Any] = obs.get
     if (row("cnt").asInstanceOf[java.lang.Long] == 0L) return None
     val stats = statColumn(table).flatMap { _ =>
@@ -1417,7 +1456,10 @@ object GraftIndex {
     * vs 783; N = 262144: 15944 vs 1115 — mostly the spend marks, whose
     * nested rows deserialize slowest (at 65536 the checkpoints table
     * alone added ~370 ms). The crossover is near 16k; the bound is the
-    * largest measured size that still wins clearly. */
+    * largest measured size that still wins clearly. The same bound caps
+    * the `address_stats` rows the driver keeps for address windows
+    * ([[GraftIndex.addressStatsMemo]]); those are folded in the driver and
+    * never shipped. */
   val InlineMaxRows: Long = 6144L
 
   /** A spend mark's type, the value of the spends [[DriverTable]]. */
@@ -1493,6 +1535,7 @@ object GraftIndex {
     val sketchRows = new SegmentRows[Sketch]
     val checkpointRows = new SegmentRows[(Long, String)]
     val spendRows = new SegmentRows[SpendMark]
+    val addressRows = new SegmentRows[AddressStat]
   }
 
   private[index] type SegmentRows[A] = java.util.concurrent.ConcurrentHashMap[String, Seq[A]]
@@ -1504,6 +1547,11 @@ object GraftIndex {
   /** One decoded `spends` row; `mark` holds spent_at, spent_by, spent_with. */
   private[index] final case class SpendMark(txId: String, outputIndex: Int,
                                             mark: org.apache.spark.sql.Row)
+
+  /** One decoded `address_stats` row: an address's creation-slot window
+    * within one commit. */
+  final case class AddressStat(address: String, paymentCredential: Option[String],
+                               minSlot: Long, maxSlot: Long)
 
   /** The live checkpoints, held in the driver: `bySlot` for
     * `/checkpoints/{slot}`, `table` (slot → header hash) for F4's per-row
@@ -1517,6 +1565,61 @@ object GraftIndex {
   private def keyHash(key: String): Long =
     new XxHash64(Seq(Literal(key))).eval().asInstanceOf[Long]
 
+  /** Fails, naming `table`, unless `df` is built only from materialized
+    * relations — the precondition of [[GraftIndex.commitAll]]'s
+    * `concurrentWrites`. Every leaf of its plan, after cached data is
+    * substituted, must be cached rows (`InMemoryRelation`), an RDD's rows
+    * (`LogicalRDD`: a local checkpoint, a streaming batch), files
+    * (`LogicalRelation`: parquet segments) or literal rows
+    * (`LocalRelation`); and nothing but column references, aliases and
+    * literals may be computed over literal rows by single-input operators,
+    * because the optimizer evaluates such expressions in the driver
+    * (`ConvertToLocalRelation`). A join or union with literal rows is
+    * fine: its other input is not literal. */
+  private def requireMaterialized(table: String, df: DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, UnaryNode}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    def literal(p: LogicalPlan): Boolean = p match {
+      case _: LocalRelation => true
+      case u: UnaryNode     => literal(u.child)
+      case _                => false
+    }
+    val plan = df.queryExecution.withCachedData
+    val offending = plan.collectLeaves().collectFirst {
+      case l if !(l.isInstanceOf[InMemoryRelation] || l.isInstanceOf[LogicalRDD] ||
+          l.isInstanceOf[LogicalRelation] || l.isInstanceOf[LocalRelation]) =>
+        s"a ${l.nodeName} leaf"
+    }.orElse(plan.collectFirst {
+      case u: UnaryNode if literal(u.child) && u.expressions.exists(_.exists {
+          case _: Attribute | _: Alias | _: Literal => false
+          case _                                    => true
+        }) => s"${u.nodeName} computes over literal rows"
+    })
+    offending.foreach { what =>
+      throw new IllegalArgumentException(s"concurrent write of $table: the frame is not " +
+        s"built only from materialized relations ($what); materialize it or write serially")
+    }
+  }
+
+  /** Side tables whose small writes take the one-partition cut-over (see
+    * `writeSegmentAt`). */
+  private val SideTables = Set("policies", "address_stats", "binary_data", "scripts")
+
+  /** Run `f` with the Spark jobs it starts on this thread described as
+    * `desc` — how every job the index, the ingest and the tick run is
+    * named (`graft.write …`, `graft.ingest …`, `graft.tick …`). Scoped: the
+    * caller's own description (an HTTP route, a bench query) is restored
+    * afterwards. */
+  def describedAs[A](spark: SparkSession, desc: String)(f: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try f finally sc.setJobDescription(prev)
+  }
+
   /** Conf-isolated sibling session (same SparkContext, SparkConf defaults)
     * with AQE off, for writes whose output is single-partition by
     * construction — see the writeSegmentAt note. Cached per parent session;
@@ -1526,7 +1629,7 @@ object GraftIndex {
   private val noAqeSessions =
     new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession,
                                                org.apache.spark.sql.SparkSession]
-  private[index] def noAqeSession(s: org.apache.spark.sql.SparkSession)
+  private[graft] def noAqeSession(s: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.SparkSession =
     noAqeSessions.computeIfAbsent(s, k => {
       val ns = k.newSession()

@@ -63,9 +63,9 @@ object Mutations {
     * LIMIT-50000 incremental dance exists only to bound writer latency. */
   def pruneInputs(ix: GraftIndex, longestRollback: Long): Long = {
     val snap0 = ix.pinned // one manifest read for the whole derivation
-    val maxSlot = snap0.table("checkpoints").agg(max("slot_no")).head() match {
-      case r if r.isNullAt(0) => return 0L
-      case r                  => r.getLong(0)
+    val maxSlot = snap0.maxCheckpoint match {
+      case None         => return 0L
+      case Some((s, _)) => s
     }
     val threshold = maxSlot - longestRollback
     // collected = rows(before) − rows(after), both off MANIFEST STATS —
@@ -185,7 +185,8 @@ object Mutations {
     * Segments entirely beyond s are dropped from the manifest (no IO);
     * segments provably clean (created ≤ s AND max spent_at ≤ s per the
     * manifest spent stat) are kept untouched; everything else is rewritten.
-    * Returns the new max checkpoint slot, if any. */
+    * Returns the new max checkpoint slot, if any — from the index's tip
+    * memo, so a no-op rollback (a resume at the tip) runs no Spark job. */
   def rollbackTo(ix: GraftIndex, s: Long): Option[Long] = {
     // ONE atomic manifest swap for all three tables: a crash mid-rollback
     // can no longer expose inputs cut but checkpoints stale (the state the
@@ -198,8 +199,7 @@ object Mutations {
     // concurrent: the straddling rewrites are plain filters over disjoint
     // parquet scans — no shared stateful expression instances
     if (changes.nonEmpty) ix.commitAll(replaceKeeping = changes, concurrentWrites = true)
-    val row = ix.table("checkpoints").agg(max("slot_no")).head()
-    if (row.isNullAt(0)) None else Some(row.getLong(0))
+    ix.maxCheckpoint.map(_._1)
   }
 
   private type Change = (String, (List[GraftIndex.Segment], Option[org.apache.spark.sql.DataFrame]))

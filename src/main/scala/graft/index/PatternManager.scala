@@ -46,10 +46,7 @@ object PatternManager {
                   since: Long, longestRollback: Long = 36 * 3600,
                   allowUnsafe: Boolean = false,
                   sinceHeaderHash: Option[String] = None): Unit = {
-    val tip = ix.table("checkpoints").agg(max("slot_no")).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r                  => r.getLong(0)
-    }
+    val tip = ix.maxCheckpoint.fold(0L)(_._1)
     val floor = tip - longestRollback
     if (since < floor && !allowUnsafe) throw SafeZoneViolation(since, floor)
     sinceHeaderHash.foreach { expected =>

@@ -4,6 +4,8 @@ import graft.index.GraftIndex
 import graft.model.Pattern
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.storage.StorageLevel
 
 /** Input-management policy — the reference's `--prune-utxo` switch
   * (/root/reference/src/Kupo/App.hs:558-577): what happens to an index row
@@ -57,7 +59,22 @@ object Indexer {
 
   def ingest(ix: GraftIndex, blocks: DataFrame, patterns: Set[Pattern],
              inputManagement: InputManagement = MarkSpentInputs): Unit = {
-    val m = MatchBlock(blocks, patterns)
+    // the normalized blocks are computed ONCE, in one job, and every frame
+    // of the batch reads those rows: its seven tables then share no
+    // expression the optimizer evaluates, so their writes may overlap
+    // (commitAll checks it), and an empty batch ends here. A caller's own
+    // cache is used as it is and left in place.
+    val owned = blocks.storageLevel == StorageLevel.NONE
+    if (owned) blocks.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // counted with AQE off: one job builds the rows and counts them
+      val n = GraftIndex.describedAs(ix.spark, "graft.ingest materialize")(
+        GraftShim.rebind(GraftIndex.noAqeSession(ix.spark), blocks).count())
+      if (n > 0) commit(ix, MatchBlock(blocks, patterns), inputManagement)
+    } finally if (owned) blocks.unpersist()
+  }
+
+  private def commit(ix: GraftIndex, m: Match, inputManagement: InputManagement): Unit = {
     val (produced, spends) = inputManagement match {
       case MarkSpentInputs => (m.produced, m.spends)
       case RemoveSpentInputs(longestRollback, tipSlot) =>
@@ -89,9 +106,7 @@ object Indexer {
           else m.spends.join(removed, Seq("tx_id", "output_index"), "left_anti"))
     }
     // ONE atomic manifest bump for the whole batch (the reference's
-    // one-transaction-per-drain); the six segment writes run sequentially —
-    // see commitAll's note on why concurrent writes over plans sharing one
-    // expression tree are unsafe
+    // one-transaction-per-drain), its seven segment writes overlapping
     ix.commitAll(appends = Map(
       "checkpoints" -> m.checkpoints,
       "inputs" -> produced,
@@ -99,7 +114,8 @@ object Indexer {
       "address_stats" -> MatchBlock.addressStats(produced),
       "binary_data" -> m.datums,
       "scripts" -> m.scripts,
-      "spends" -> spends))
+      "spends" -> spends),
+      concurrentWrites = true)
   }
 
   def setPatterns(ix: GraftIndex, patterns: Set[Pattern]): Unit = {

@@ -3,7 +3,7 @@ package graft.query
 import graft.expressions.DriverLookup
 import graft.index.{GraftIndex, PatternManager}
 import graft.model.Pattern
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -358,24 +358,41 @@ object FoldInputs {
 
   /** The address→slot-window twin of [[policyWindow]], fed by the
     * address_stats side table (schema v5): P3 exact, P4 payment-credential,
-    * P5 delegation-prefix and P6 both-credential patterns probe the compact
-    * per-(address, batch) stats rows — exact keys bloom-served, the prefix
-    * via the address sort's min/max — and the [min,max] creation-slot
+    * P5 delegation-prefix and P6 both-credential patterns match the compact
+    * per-(address, batch) stats rows, and the [min,max] creation-slot
     * window prunes inputs segments. Same soundness shape: the side table
     * is a superset of live inputs (stale rows widen, never narrow), the
-    * address predicate in-scan still decides membership. */
-  private def addressWindow(ix: GraftIndex, pattern: Pattern): Option[(Long, Long)] = {
-    val probe: Option[org.apache.spark.sql.Column] = pattern match {
-      case Pattern.MatchExact(a)      => Some(col("address") === a)
-      case Pattern.MatchPayment(c)    => Some(col("payment_credential") === c)
-      case Pattern.MatchDelegation(d) => Some(col("address").startsWith("01" + d))
-      case Pattern.MatchPaymentAndDelegation(p, d) =>
-        Some(col("address").startsWith("01" + d) && col("payment_credential") === p)
-      case _ => None
-    }
+    * address predicate in-scan still decides membership. While the table
+    * holds at most [[GraftIndex.InlineMaxRows]] rows the window is folded
+    * in the driver over its memoized rows ([[GraftIndex.addressStatsMemo]]),
+    * with no Spark job; above the bound it is one probe job — exact keys
+    * bloom-served, the prefix via the address sort's min/max. */
+  private[graft] def addressWindow(ix: GraftIndex, pattern: Pattern): Option[(Long, Long)] = {
+    val probe: Option[(org.apache.spark.sql.Column, GraftIndex.AddressStat => Boolean)] =
+      pattern match {
+        case Pattern.MatchExact(a) =>
+          Some((col("address") === a, _.address == a))
+        case Pattern.MatchPayment(c) =>
+          Some((col("payment_credential") === c, _.paymentCredential.contains(c)))
+        case Pattern.MatchDelegation(d) =>
+          Some((col("address").startsWith("01" + d), _.address.startsWith("01" + d)))
+        case Pattern.MatchPaymentAndDelegation(p, d) =>
+          Some((col("address").startsWith("01" + d) && col("payment_credential") === p,
+            r => r.address.startsWith("01" + d) && r.paymentCredential.contains(p)))
+        case _ => None
+      }
     probe.filter(_ => ix.manifest.tables.getOrElse("inputs", Nil).size >= 2 &&
         ix.manifest.tables.getOrElse("address_stats", Nil).nonEmpty)
-      .map(pr => slotWindow(ix.table("address_stats").where(pr), "min_slot", "max_slot"))
+      .map { case (column, row) =>
+        ix.addressStatsMemo match {
+          case Some(rows) =>
+            rows.iterator.filter(row).foldLeft((Long.MaxValue, Long.MinValue)) {
+              case ((lo, hi), r) => (lo min r.minSlot, hi max r.maxSlot)
+            }
+          case None =>
+            slotWindow(ix.table("address_stats").where(column), "min_slot", "max_slot")
+        }
+      }
   }
 
   /** [min(lo), max(hi)] over the matching side-table rows, in ONE Spark
@@ -539,39 +556,53 @@ object FoldInputs {
 
   /** R6 listCheckpointsDesc — logarithmically-spaced recent checkpoints
     * (SQLite.hs:722-733,1005-1010): for each offset, the nearest checkpoint at
-    * or after (tip − offset); dedup; desc. ~70 conditional `min(when(...))`
-    * aggregates in ONE map-side-combined pass — the round-1 non-equi join
-    * multiplied the checkpoints table by the offset count (≈40× row blowup,
-    * 400M intermediate rows at mainnet's 10M checkpoints) to produce an
-    * 11-row answer.
+    * or after (tip − offset); dedup; desc. What every resume offers as
+    * intersection candidates, and `GET /checkpoints`.
     *
-    * ONE lazy plan, no driver round-trips: the offset list is the STATIC
-    * 0..10 ++ 20·2^k series capped at Long range (the data-dependent
-    * `takeWhile(_ <= tip)` becomes the in-plan `tip − off >= 0` gate —
-    * same target set, since off <= tip ⟺ tip − off >= 0), the tip is a
-    * broadcast 1-row aggregate instead of a `.head()`, and the selected
-    * slots broadcast-join back for header hashes instead of an `isin`
-    * built on the driver. An empty table falls through naturally (null
-    * tip → all mins null → empty join) — no early-return collect. */
-  def listCheckpointsDesc(ix: GraftIndex): DataFrame = {
-    val cp = ix.table("checkpoints")
-    val offsets = (0L to 10L) ++
-      Iterator.iterate(20L)(_ * 2).takeWhile(o => o > 0 && o <= Long.MaxValue / 2).toSeq
-    val tip = cp.agg(max("slot_no").as("_tip"))
-    val minCols = offsets.zipWithIndex.map { case (off, i) =>
-      min(when(col("_tip") - off >= 0 && col("slot_no") >= col("_tip") - off,
-        col("slot_no"))).as(s"m$i")
+    * While the checkpoints memo applies ([[GraftIndex.checkpointsMemo]]: at
+    * most [[GraftIndex.InlineMaxRows]] rows, no repeated slot) the answer
+    * is picked from its sorted map in the driver and returned as literal
+    * rows — collecting it runs no Spark job. Otherwise it is ONE lazy
+    * plan: ~70 conditional `min(when(...))` aggregates in one
+    * map-side-combined pass (a non-equi join would multiply the table by
+    * the offset count — ≈40× rows at mainnet's 10M checkpoints — to
+    * produce an 11-row answer); the offsets are the STATIC series, the
+    * data-dependent `takeWhile(_ <= tip)` becoming the in-plan
+    * `tip − off >= 0` gate; the tip is a broadcast 1-row aggregate, and
+    * the selected slots broadcast-join back for header hashes. An empty
+    * table falls through naturally (null tip → all mins null → empty join). */
+  def listCheckpointsDesc(ix: GraftIndex): DataFrame =
+    ix.checkpointsMemo match {
+      case Some(cps) =>
+        val picked = cps.bySlot.lastOption.toSeq.flatMap { case (tip, _) =>
+          CheckpointOffsets.filter(off => tip - off >= 0)
+            .flatMap(off => cps.bySlot.minAfter(tip - off))
+        }.distinct.sortBy(-_._1)
+        ix.spark.createDataFrame(
+          java.util.Arrays.asList(picked.map { case (s, h) => Row(s, h) }: _*),
+          graft.Schemas.checkpointsType)
+      case None =>
+        val cp = ix.table("checkpoints")
+        val tip = cp.agg(max("slot_no").as("_tip"))
+        val minCols = CheckpointOffsets.zipWithIndex.map { case (off, i) =>
+          min(when(col("_tip") - off >= 0 && col("slot_no") >= col("_tip") - off,
+            col("slot_no"))).as(s"m$i")
+        }
+        val slots = cp.crossJoin(broadcast(tip))
+          .agg(minCols.head, minCols.tail: _*)
+          .select(explode(array(CheckpointOffsets.indices.map(i => col(s"m$i")): _*))
+            .as("slot_no"))
+          .where(col("slot_no").isNotNull)
+          .distinct()
+        cp.join(broadcast(slots), Seq("slot_no"))
+          .select(col("slot_no"), col("header_hash"))
+          .dropDuplicates("slot_no") // re-ingested batches can duplicate rows
+          .orderBy(col("slot_no").desc)
     }
-    val slots = cp.crossJoin(broadcast(tip))
-      .agg(minCols.head, minCols.tail: _*)
-      .select(explode(array(offsets.indices.map(i => col(s"m$i")): _*)).as("slot_no"))
-      .where(col("slot_no").isNotNull)
-      .distinct()
-    cp.join(broadcast(slots), Seq("slot_no"))
-      .select(col("slot_no"), col("header_hash"))
-      .dropDuplicates("slot_no") // re-ingested batches can duplicate rows
-      .orderBy(col("slot_no").desc)
-  }
+
+  /** R6's offsets from the tip: 0..10, then 20·2^k capped at Long range. */
+  private val CheckpointOffsets: Seq[Long] = (0L to 10L) ++
+    Iterator.iterate(20L)(_ * 2).takeWhile(o => o > 0 && o <= Long.MaxValue / 2).toSeq
 
   /** R7 listAncestorsDesc — top-k checkpoints strictly before a slot. */
   def listAncestorsDesc(ix: GraftIndex, slot: Long, n: Int): DataFrame =

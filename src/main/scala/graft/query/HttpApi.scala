@@ -104,7 +104,7 @@ final class HttpApi(
     * on the server's pool threads) is restored afterwards. */
   def route(req: Request): Response = {
     val desc = s"${req.method} ${routeTemplate(req.path)}"
-    withJobDescription(desc) {
+    GraftIndex.describedAs(ix.spark, desc) {
       val r =
         try routeUnsafe(req)
         catch {
@@ -112,15 +112,8 @@ final class HttpApi(
           case e: Api.PointMismatch    => Response.json(400, Api.errorJson(e))
           case e: IllegalArgumentException => Response.json(400, Api.errorJson(e))
         }
-      r.copy(write = out => withJobDescription(desc)(r.write(out)))
+      r.copy(write = out => GraftIndex.describedAs(ix.spark, desc)(r.write(out)))
     }
-  }
-
-  private def withJobDescription[A](desc: String)(f: => A): A = {
-    val sc = ix.spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try f finally sc.setJobDescription(prev)
   }
 
   /** The path parameter each route takes after its first segment. */

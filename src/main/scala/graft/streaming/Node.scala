@@ -26,7 +26,9 @@ object Node {
     * producer's chain, align the index to it, let the feeder start its
     * replay, drain everything pending, and return the post-drain health
     * snapshot. `rewrite` is the per-line bridge for non-Ogmios feeds
-    * (e.g. `HydraReader.ogmiosCol`). */
+    * (e.g. `HydraReader.ogmiosCol`). Every Spark job of the turn is named
+    * by its phase: `graft.tick resume`, `graft.ingest parse` /
+    * `materialize` / `reorg`, `graft.write <segment>`, `graft.tick health`. */
   def runOnce(spark: SparkSession, inputDir: String, ix: GraftIndex,
               patterns: Set[Pattern],
               findIntersect: Seq[Resume.Point] => Option[Resume.Point],
@@ -39,11 +41,12 @@ object Node {
               nowMs: Long = System.currentTimeMillis(),
               params: Option[Health.NetworkParameters] = None)
       : (Resume.Point, Health.Snapshot) = {
-    val intersection = Resume.resume(ix, findIntersect, since, fetchTip)
+    val intersection = GraftIndex.describedAs(spark, "graft.tick resume")(
+      Resume.resume(ix, findIntersect, since, fetchTip))
     startFeeder(intersection)
     StreamingIndexer.runAvailableNow(spark, inputDir, ix, patterns, rewrite)
-    (intersection,
+    (intersection, GraftIndex.describedAs(spark, "graft.tick health")(
       Health.snapshot(ix, Health.ConnectionStatus.Connected,
-        nodeTip, lastBlockAtMs, nowMs, params))
+        nodeTip, lastBlockAtMs, nowMs, params)))
   }
 }

@@ -32,7 +32,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Exactly-once: the file source checkpoint records which files are
   * consumed; `Indexer.ingest` appends are idempotent (PK dedup at
   * read/compaction), so a batch replayed after a crash re-appends the same
-  * rows harmlessly — the INSERT OR IGNORE analogue at the stream level. */
+  * rows harmlessly — the INSERT OR IGNORE analogue at the stream level.
+  *
+  * Cost of a forward-only drain, in Spark jobs: one parses the batch and
+  * looks for rollbacks (`graft.ingest parse`), one materializes its blocks
+  * (`graft.ingest materialize`), and the commit writes the seven index
+  * tables concurrently and then the bloom sidecar, one job each
+  * (`graft.write …`) — ten in all, the same for any batch small enough
+  * for the one-file write cut-over. A reorg batch adds its rollback and
+  * the ordered re-read (`graft.ingest reorg`). */
 object StreamingIndexer {
 
   /** Process one drained micro-batch with chain-order (net-effect) semantics.
@@ -53,12 +61,13 @@ object StreamingIndexer {
                    maxSegmentsPerTable: Option[Int] = None): Unit = {
     val env = BlockReader.parseEnvelope(rewritten(raw, rewrite)).cache()
     try {
-      val rollbackPoints = BlockReader.rollbacks(env).collect()
+      val rollbackPoints = GraftIndex.describedAs(ix.spark, "graft.ingest parse")(
+        BlockReader.rollbacks(env).collect())
       if (rollbackPoints.isEmpty) {
-        // forwards only: order within the batch is immaterial (appends)
-        val blocks = BlockReader.blocks(env)
-        if (!blocks.isEmpty) Indexer.ingest(ix, blocks, patterns)
-      } else {
+        // forwards only: order within the batch is immaterial (appends);
+        // ingest materializes the blocks once and skips an empty batch
+        Indexer.ingest(ix, BlockReader.blocks(env), patterns)
+      } else GraftIndex.describedAs(ix.spark, "graft.ingest reorg") {
         processOrdered(ix, raw, patterns, rewrite,
           fallbackTarget = rollbackPoints.map(_.getLong(0)).min)
       }
@@ -101,8 +110,7 @@ object StreamingIndexer {
     def barrierFirst(): Unit = {
       Mutations.rollbackTo(ix, fallbackTarget)
       val env = BlockReader.parseEnvelope(rewritten(raw, rewrite))
-      val blocks = BlockReader.blocks(env)
-      if (!blocks.isEmpty) Indexer.ingest(ix, blocks, patterns)
+      Indexer.ingest(ix, BlockReader.blocks(env), patterns)
     }
 
     val ordered: DataFrame =
@@ -141,8 +149,8 @@ object StreamingIndexer {
       val survives = rbs.zip(suffixMin).foldRight(lit(true): Column) {
         case (((rseq, _), m), later) => when(col("seq") < rseq, slotCol <= m).otherwise(later)
       }
-      val blocks = BlockReader.blocks(env.where(col("direction") === "forward").where(survives))
-      if (!blocks.isEmpty) Indexer.ingest(ix, blocks, patterns)
+      Indexer.ingest(ix,
+        BlockReader.blocks(env.where(col("direction") === "forward").where(survives)), patterns)
     } finally env.unpersist()
   }
 

@@ -56,9 +56,10 @@ object Serve {
     def tick(): Health.Snapshot = {
       // --since only steers the FIRST boot (an indexed chain resumes from
       // its own checkpoints, like the reference)
+      val indexed = GraftIndex.describedAs(spark, "graft.tick resume")(
+        graft.query.FoldInputs.maxCheckpoint(ix).isDefined)
       val since =
-        if (graft.query.FoldInputs.maxCheckpoint(ix).isDefined)
-          Resume.Since.Unspecified
+        if (indexed) Resume.Since.Unspecified
         else cfg.since.map {
           case "origin" => Resume.Since.FromPoint(Resume.Point(-1L, "origin"))
           case s => s.split("\\.", 2) match {

@@ -323,6 +323,9 @@ class HttpApiSpec extends SparkSpec {
         assert(jobs(s"/checkpoints/$p").isEmpty, s"/checkpoints/$p ran jobs")
       }
       assert(get(s"$base/checkpoints/$slot?strict").body().contains(s""""slot_no":$slot"""))
+      // the log-spaced list is picked from the same checkpoints memo
+      assert(jobs("/checkpoints").isEmpty, "/checkpoints ran jobs")
+      assert(get(s"$base/checkpoints").body().startsWith("""[{"slot_no":"""))
       assert(jobs("/health").isEmpty)
     } finally server.stop(0)
   }

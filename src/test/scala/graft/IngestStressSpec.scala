@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * into many fresh indexes, checking the committed row counts every time —
   * guards the atomic multi-table commit against scheduling-order races.
   * 8 iterations per path run by default; the remaining 32 of the original
-  * 40 are HeavyTest-tagged amplification (same body, wider sample). */
+  * 40 are HeavyTest-tagged amplification (same body, wider sample).
+  * `Indexer.ingest` writes its seven tables concurrently, so the
+  * fresh-index case is the race test of those overlapping writes; the
+  * guard that keeps unmaterialized frames out of them is tested here too. */
 class IngestStressSpec extends SparkSpec {
   import spark.implicits._
 
@@ -87,6 +90,39 @@ class IngestStressSpec extends SparkSpec {
         .collect().map(_.toSeq).toSeq.sortBy(_.toString)
       assert(rows.size == 3, s"iteration $i committed ${rows.size}: $rows")
     }
+  }
+
+  test("concurrent commits refuse frames not built only from materialized relations") {
+    val raw = Seq(fwd(100, "11" * 32, tx1), fwd(110, "12" * 32, tx2)).toDF("raw")
+    // the shape that garbled rows: every frame parses the same literal
+    // lines with one from_json, evaluated by each writer's optimizer
+    val m = graft.ingest.MatchBlock(BlockReader.blocks(BlockReader.parseEnvelope(raw)),
+      Set[Pattern](Pattern.MatchAny(true)))
+    val ix = new GraftIndex(spark, tmpDir("graft-stress-guard"))
+    val refused = intercept[IllegalArgumentException](ix.commitAll(appends = Map(
+      "checkpoints" -> m.checkpoints, "spends" -> m.spends), concurrentWrites = true))
+    assert(refused.getMessage.contains("concurrent write of checkpoints") ||
+      refused.getMessage.contains("concurrent write of spends"), refused.getMessage)
+    assert(ix.manifest.version == 0L, "a refused commit wrote nothing")
+    // serially the same frames commit
+    ix.commitAll(appends = Map("checkpoints" -> m.checkpoints, "spends" -> m.spends))
+    assert(ix.table("checkpoints").count() == 2)
+
+    // materialized (checkpointed, cached), parquet and literal frames overlap
+    val cached = m.produced.cache()
+    try {
+      ix.commitAll(appends = Map(
+        "inputs" -> cached,
+        "policies" -> graft.ingest.MatchBlock.policiesOf(cached),
+        "binary_data" -> m.datums.localCheckpoint(true),
+        "checkpoints" -> ix.table("checkpoints").where($"slot_no" > 100L)
+          .withColumn("slot_no", $"slot_no" + 1),
+        "patterns" -> Seq("*").toDF("pattern")), concurrentWrites = true)
+    } finally cached.unpersist()
+    assert(ix.table("inputs").count() == 3)
+    assert(ix.table("checkpoints").select("slot_no").as[Long].collect().sorted.toSeq ==
+      Seq(100L, 110L, 111L))
+    assert(ix.table("patterns").count() == 1)
   }
 
   test("8 fresh-index ingests all commit 3 inputs") {

@@ -3,7 +3,8 @@ package graft
 import graft.index.{GraftIndex, Mutations, PatternManager}
 import graft.ingest.Indexer
 import graft.model.Pattern
-import graft.query.{Api, FoldInputs}
+import graft.query.{Api, FoldInputs, Health, HttpApi}
+import graft.streaming.Resume
 import graft.tools.FixtureChain
 import graft.tools.FixtureChain.{baseAddr, enterpriseAddr, hex28, hex32}
 import org.apache.spark.sql.functions.col
@@ -15,8 +16,11 @@ import org.apache.spark.sql.functions.col
   * same index, so every answer can be compared byte for byte: the full
   * `FoldInputs.asJson` output of random present and absent tx keys, output
   * references, address and policy patterns under each status flag and
-  * order, and `getCheckpointBySlot` strict and non-strict, over the index
-  * states that change what the memos hold. Seeded, so deterministic. */
+  * order, `getCheckpointBySlot` strict and non-strict, the resume's
+  * log-spaced candidates, the `GET /checkpoints` body and the address slot
+  * windows, over the index states that change what the memos hold (empty,
+  * one checkpoint, gapped and duplicate slots among them). Seeded, so
+  * deterministic. */
 class InlineReadPropertySpec extends SparkSpec {
   import Api._
 
@@ -47,6 +51,28 @@ class InlineReadPropertySpec extends SparkSpec {
     }
   }
 
+  /** What the resume, `GET /checkpoints` and the address windows answer:
+    * the resume's candidates, the route's body bytes, and the slot window
+    * of each address pattern. */
+  private def memoAnswers(ix: GraftIndex): (Seq[Resume.Point], Seq[Byte], Seq[Option[(Long, Long)]]) = {
+    val (_, candidates) = Resume.startOrResume(ix, Resume.Since.FromTip,
+      fetchTip = () => Resume.Point(-1L, "origin"))
+    val api = new HttpApi(ix, () => spark.emptyDataFrame,
+      () => Health.snapshot(ix, Health.ConnectionStatus.Connected))
+    val body = new java.io.ByteArrayOutputStream
+    api.route(HttpApi.Request("GET", "/checkpoints")).write(body)
+    val windows = addressPatterns.map(p => FoldInputs.addressWindow(ix.pinned, p))
+    (candidates, body.toByteArray.toSeq, windows)
+  }
+
+  private val addressPatterns: Seq[Pattern] =
+    (Seq(baseAddr(0, 0), baseAddr(1, 0), baseAddr(2, 1), baseAddr(9, 9), enterpriseAddr(1))
+      .map(Pattern.MatchExact(_)) ++
+      Seq(s"${baseAddr(1, 0).takeRight(56)}/*", s"${enterpriseAddr(1).takeRight(56)}/*",
+        s"${hex28(77)}/*", s"*/${hex28(1000)}", s"*/${hex28(1001)}", s"*/${hex28(77)}",
+        s"${hex28(2002)}/${hex28(1001)}", s"${baseAddr(1, 0).takeRight(56)}/${hex28(1000)}")
+        .flatMap(Pattern.fromText))
+
   /** Every inline-path answer equals the join path's; `inlined` says
     * whether a small read under the default bound is expected to plan no
     * join at all (false when a memo must fall back). */
@@ -62,6 +88,7 @@ class InlineReadPropertySpec extends SparkSpec {
           PatternManager.getCheckpointBySlot(joins, s, strict), s"$state: slot $s strict=$strict")
       }
     }
+    assert(memoAnswers(ix) == memoAnswers(joins), s"$state: resume, /checkpoints or windows")
     // above the bound the plans are the join paths'; under it a small read
     // (here a present tx key) plans no join and no checkpoints scan
     val tx = ix.table("inputs").select("tx_id").head().getString(0)
@@ -89,6 +116,21 @@ class InlineReadPropertySpec extends SparkSpec {
       java.nio.file.Paths.get(ix.root, "manifest.json"), Manifest.toJson(doctored))
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(ix.root, ".manifest.json.crc"))
     new GraftIndex(spark, ix.root, vacuumGraceMs = 0L)
+  }
+
+  test("resume candidates, GET /checkpoints and address windows match the Spark plans on empty and single-checkpoint indexes") {
+    val ix = new GraftIndex(spark, tmpDir("graft-inline-few"), vacuumGraceMs = 0L)
+    // a bound below 0 keeps even an empty table off the memos
+    def same(state: String): Unit =
+      assert(memoAnswers(ix) == memoAnswers(ix.withInlineMaxRows(-1)), state)
+    same("empty index")
+    // nothing indexed: the resume offers only the fetched tip
+    assert(memoAnswers(ix)._1 == Seq(Resume.Point(-1L, "origin")))
+    Indexer.ingest(ix, FixtureChain.toDf(spark, FixtureChain.chain(1)), patterns)
+    same("one checkpoint")
+    assert(memoAnswers(ix)._1.size == 1)
+    Indexer.ingest(ix, FixtureChain.toDf(spark, FixtureChain.chain(3).drop(1)), patterns)
+    same("three checkpoints over two inputs segments")
   }
 
   test("driver-resolved reads answer byte-identically to the join paths in every index state") {
