@@ -2,7 +2,7 @@
 # Run a graft main class directly against the sbt-compiled classes, without
 # sbt (so measurement runs can proceed while sbt itself is busy, and without
 # sbt's launcher overhead). Mirrors build.sbt's forked-run JVM flags.
-#   scripts/run_main.sh graft.tools.QuickBench q_cms q_hll
+#   scripts/run_main.sh graft.tools.Probe time q_cms q_hll
 set -euo pipefail
 CLASSES=/root/repo/target/scala-2.13/classes
 ADD_OPENS=""

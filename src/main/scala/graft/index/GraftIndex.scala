@@ -657,18 +657,7 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
         "policies" -> (() => graft.ingest.MatchBlock.policiesOf(df)),
         "address_stats" -> (() => graft.ingest.MatchBlock.addressStats(df)))
         .filter { case (t, _) => m.tables.getOrElse(t, Nil).nonEmpty }
-      // A/B attribution seam, BENCH/TEST ONLY — never set in deployment:
-      // skipping the maintenance breaks the superset invariant until the
-      // next empty→non-empty transition backfill, so window-pruned reads
-      // over the unmaintained segments become unsound. Exists to measure
-      // what the two per-append aggregation jobs cost (SCALE.md G.4).
-      val maintain = spark.conf
-        .getOption("spark.graft.append.sideMaintenance").forall(_.toBoolean)
-      if (sides.nonEmpty && !maintain)
-        System.err.println("[graft] spark.graft.append.sideMaintenance=false: " +
-          s"SKIPPING policies/address_stats maintenance for an inputs append at $root " +
-          "— the superset invariant is NOT maintained (A/B benchmarking seam)")
-      if (sides.nonEmpty && maintain) {
+      if (sides.nonEmpty) {
         commitAll(appends =
           Map("inputs" -> df) ++ sides.map { case (t, mk) => t -> mk() })
         return
@@ -851,8 +840,7 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
     // two-level pruning for slot-range scans (no directory partitioning —
     // multi-segment reads stay trivial and small batches don't explode into
     // thousands of tiny partition dirs)
-    lazy val small: Boolean = out.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      GraftIndex.positiveLongConf(spark, "spark.graft.write.rangeMinBytes", 8L << 20)
+    lazy val small: Boolean = out.queryExecution.optimizedPlan.stats.sizeInBytes <= (8L << 20)
     val clustered =
       if (table == "inputs") {
         // RANGE partitioning on created_at, not hash on created_bucket:
@@ -879,7 +867,7 @@ final class GraftIndex private (val spark: SparkSession, val root: String,
         // reads. THRESHOLD CALIBRATION (measured): plan sizeInBytes for a
         // parquet-derived frame tracks COMPRESSED scan bytes (the sf0.1
         // shared build estimates ~24 MB for a 90 MB-raw segment), and a
-        // pattern filter estimates selectivity 1.0 — so the default must
+        // pattern filter estimates selectivity 1.0 — so the threshold must
         // sit well under the smallest frame whose read parallelism
         // matters, not at the raw-bytes scale. 8 MB keeps every
         // micro-batch and copy-sized rewrite on the one-file path while

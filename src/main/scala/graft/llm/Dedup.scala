@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -480,11 +481,19 @@ object Dedup {
     while (changed > 0) {
       val next = propagate(edges, labels).localCheckpoint(true)
       changed = next.where(col("lbl") =!= col("prev")).count()
+      // `next` no longer reads the round before it: release that round's
+      // blocks; only the last round's stay, read by the returned frame
+      releaseCheckpoint(labels)
       labels = next.select("doc", "lbl")
     }
     edges.unpersist()
     asClusters(labels)
   }
+
+  /** Drops the blocks of the local checkpoint `df` reads. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = true))
 
   /** The driver path of [[duplicateClusters]]: `None` when the bound is 0,
     * the ids are not longs, a pair holds a null, or there are more than

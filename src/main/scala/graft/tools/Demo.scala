@@ -3,11 +3,7 @@ package graft.tools
 // scratch verification driver — drives the public API end-to-end
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
 
     import graft.index.{GraftIndex, Mutations}

@@ -19,13 +19,7 @@ object HttpRehearsal {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-http-rehearsal")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val ix = graft.queries.KupoPipelineQueries.buildIndex(spark, sfDir)

@@ -24,11 +24,7 @@ import org.apache.spark.sql.functions._
 object LlmScaleRehearsal {
 
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
 

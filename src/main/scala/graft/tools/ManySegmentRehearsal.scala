@@ -3,7 +3,7 @@ package graft.tools
 import graft.index.GraftIndex
 import graft.model.Pattern
 import graft.query.{Api, FoldInputs}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -32,13 +32,7 @@ object ManySegmentRehearsal {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val nSegs = args.drop(1).headOption.map(_.toInt).getOrElse(1024)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-many-segment-rehearsal")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val raw = graft.queries.KupoPipelineQueries.derivedShelleyInputs(spark, sfDir)
     val b = raw.agg(min("created_at"), max("created_at")).head()

@@ -10,7 +10,7 @@ package graft.tools
   * in SCALE.md Appendix A/B.
   *
   * Run: `sbt "runMain graft.tools.Rehearse [sfDir]"` — the LLM-suite
-  * fixture dir resolves from the argument, else `$GRAFT_TESTDATA_SF`,
+  * fixture dir resolves from the argument, else `$SPARK_GRAFT_SF_DIR`,
   * else the build host's `/root/testdata/sf0.1` (documented example
   * layout; the kupo suite builds its own 400-block fixture). */
 object Rehearse {
@@ -18,6 +18,6 @@ object Rehearse {
     ScaleRehearsal.main(Array.empty)
     LlmScaleRehearsal.main(
       if (args.nonEmpty) args
-      else Array(sys.env.getOrElse("GRAFT_TESTDATA_SF", "/root/testdata/sf0.1")))
+      else Array(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")))
   }
 }

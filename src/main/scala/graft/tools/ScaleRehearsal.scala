@@ -19,11 +19,7 @@ import graft.model.Pattern
   * Run: `sbt "runMain graft.tools.ScaleRehearsal"`. */
 object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val root = java.nio.file.Files.createTempDirectory("graft-scale").toString

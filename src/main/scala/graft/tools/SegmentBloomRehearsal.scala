@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.index.GraftIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale rehearsal for the schema-v6 segment-bloom point index: the
@@ -33,13 +33,7 @@ object SegmentBloomRehearsal {
     val sfDir = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-segment-bloom-rehearsal")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     // segments must EXCEED the executor slots for the task-count win to be
     // visible in wall time: N segments on C cores is ceil(N/C) scheduling

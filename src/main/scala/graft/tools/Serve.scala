@@ -94,14 +94,7 @@ object Serve {
 
   def main(args: Array[String]): Unit = {
     val cfg = parseArgs(args.toList)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val running = serve(spark, cfg)
     println(s"serving on http://127.0.0.1:${running.port} over ${cfg.workDir}")
     val stopFile = java.nio.file.Paths.get(cfg.workDir, "STOP")

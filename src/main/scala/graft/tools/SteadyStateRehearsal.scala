@@ -3,7 +3,6 @@ package graft.tools
 import graft.index.GraftIndex
 import graft.model.Pattern
 import graft.query.{Api, FoldInputs}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -33,13 +32,7 @@ object SteadyStateRehearsal {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val nCommits = args.drop(1).headOption.map(_.toInt).getOrElse(2048)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-steady-state-rehearsal")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val raw = graft.queries.KupoPipelineQueries.derivedShelleyInputs(spark, sfDir)
     val b = raw.agg(min("created_at"), max("created_at")).head()

@@ -5,6 +5,7 @@ import graft.ingest.Indexer
 import graft.model.Pattern
 import graft.query.{Api, BlockQueries, FoldInputs}
 import graft.tools.FixtureChain
+import org.apache.spark.graftshim.JobListener
 import org.apache.spark.sql.functions._
 
 /** S4/S5/R11 block queries, S9 filtered copy, F8 JSON projection. */
@@ -81,32 +82,20 @@ class ApiSurfaceSpec extends SparkSpec {
     // per-partition fetch job as the consumer advances (the cursor shape
     // the reference's chunked HTTP encoder streams from)
     val wide = res.repartition(8)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def waitFor(cond: => Boolean): Boolean = {
-      var i = 0
-      while (!cond && i < 150) { Thread.sleep(20); i += 1 }
-      cond
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val sc = spark.sparkContext
+    val (it, first) = JobListener.jobsOf(sc) {
       val it = graft.query.ResponseStream.jsonRows(wide)
       assert(it.hasNext && it.next().startsWith("{"))
-      waitFor(jobs.get() >= 1)
-      val afterFirst = jobs.get()
-      assert(afterFirst < 8,
-        s"first pull executed $afterFirst jobs — the fetch is not incremental")
-      var drained = 1L
-      it.foreach(_ => drained += 1)
-      assert(drained == n)
-      assert(waitFor(jobs.get() > afterFirst),
-        "draining the iterator must launch further per-partition fetch jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      it
+    }
+    val afterFirst = first.size
+    assert(afterFirst < 8,
+      s"first pull executed $afterFirst jobs — the fetch is not incremental")
+    var drained = 1L
+    val (_, rest) = JobListener.jobsOf(sc)(it.foreach(_ => drained += 1))
+    assert(drained == n)
+    assert(rest.nonEmpty,
+      "draining the iterator must launch further per-partition fetch jobs")
   }
 
   test("F8 golden: asJson byte-matches resultToJson on a hand-derived chain") {

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.JobCounter
+import org.apache.spark.graftshim.JobListener
 
 import graft.queries.ArtifactStore
 
@@ -114,7 +114,7 @@ class ArtifactStoreSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.setJobDescription("caller")
     try {
-      val (_, jobs) = JobCounter.around(sc)(_.jobsOf {
+      val (_, js) = JobListener.jobsOf(sc) {
         ArtifactStore(spark, d, "outer") {
           spark.range(3).count()
           ArtifactStore(spark, d, "inner") { spark.range(2).collect(); new Object }
@@ -122,7 +122,8 @@ class ArtifactStoreSpec extends SparkSpec {
           new Object
         }
         spark.range(5).collect()
-      })
+      }
+      val jobs = js.map(_.description)
       // consecutive jobs of one name collapse to one entry
       val runs = jobs.foldLeft(Vector.empty[String])((r, j) => if (r.lastOption.contains(j)) r else r :+ j)
       assert(runs == Seq("graft.artifact outer", "graft.artifact inner",

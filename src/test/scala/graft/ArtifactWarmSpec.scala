@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.LlmArtifacts
-import org.apache.spark.JobCounter
+import org.apache.spark.graftshim.JobListener
 import org.apache.spark.sql.DataFrame
 
 /** [[LlmArtifacts.warm]] builds its artifacts side by side; they must equal
@@ -32,7 +32,8 @@ class ArtifactWarmSpec extends SparkSpec {
     val (conc, seq) = (tmpDir("llm-corpus-"), tmpDir("llm-corpus-"))
     LlmCorpusFixture.write(spark, conc)
     LlmCorpusFixture.write(spark, seq)
-    val (_, jobs) = JobCounter.around(spark.sparkContext)(_.jobsOf(LlmArtifacts.warm(spark, conc)))
+    val (_, js) = JobListener.jobsOf(spark.sparkContext)(LlmArtifacts.warm(spark, conc))
+    val jobs = js.map(_.description)
     assert(jobs.nonEmpty && jobs.forall(_.startsWith("graft.artifact ")), jobs)
     val one = artifacts(seq).map { case (k, a) => k -> a() }
     artifacts(conc).zip(one).foreach { case ((k, a), (_, b)) =>

@@ -4,7 +4,7 @@ import scala.util.Random
 
 import graft.llm.Dedup
 import graft.queries.LlmArtifacts
-import org.apache.spark.JobCounter
+import org.apache.spark.graftshim.JobListener
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
@@ -81,7 +81,8 @@ class ComponentsPropertySpec extends SparkSpec {
     LlmCorpusFixture.write(spark, d)
     val pairs = LlmArtifacts.pairsOf(spark, d).count()
     assert(pairs > 0 && pairs <= Dedup.ComponentsInDriverMaxPairs)
-    val (clusters, jobs) = JobCounter.around(spark.sparkContext)(_.jobsOf(LlmArtifacts.clustersOf(spark, d)))
+    val (clusters, js) = JobListener.jobsOf(spark.sparkContext)(LlmArtifacts.clustersOf(spark, d))
+    val jobs = js.map(_.description)
     assert(jobs.size <= 2, jobs)
     assert(jobs.forall(_ == "graft.artifact clusters"), jobs)
     assert(clusters.count() > 0)

@@ -5,6 +5,7 @@ import graft.ingest.Indexer
 import graft.model.Pattern
 import graft.query.{Api, FoldInputs, Health, HttpApi, KupoHttpServer, ResponseStream}
 import graft.tools.FixtureChain
+import org.apache.spark.graftshim.JobListener
 
 import java.net.http.{HttpClient, HttpRequest => JReq, HttpResponse => JResp}
 import java.net.URI
@@ -300,11 +301,11 @@ class HttpApiSpec extends SparkSpec {
       () => Health.snapshot(ix, Health.ConnectionStatus.Connected))
     val server = KupoHttpServer.start(api, port = 0)
     val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-    try org.apache.spark.JobCounter.around(spark.sparkContext) { c =>
+    try {
       def jobs(path: String): Seq[String] = {
-        val (r, descs) = c.jobsOf(get(base + path))
+        val (r, js) = JobListener.jobsOf(spark.sparkContext)(get(base + path))
         assert(r.statusCode() == 200, s"$path: ${r.body()}")
-        descs
+        js.map(_.description)
       }
       // the first reads decode the sidecar, the checkpoints and the spends
       // delta, and memoize the tip

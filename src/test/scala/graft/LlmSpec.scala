@@ -1,6 +1,7 @@
 package graft
 
 import graft.llm.{Dedup, Multimodal, Similarity, TextAnalysis}
+import org.apache.spark.graftshim.JobListener
 import org.apache.spark.sql.functions._
 
 /** graft.llm — dedup / similarity / text-analysis / multimodal operators. */
@@ -1040,6 +1041,7 @@ class LlmSpec extends SparkSpec {
         case _ => ()
       }
     }
+    val cachedBefore = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
     spark.sparkContext.addSparkListener(listener)
     // bound 0 pins the label-propagation loop (under the bound the
     // components are found in the driver, in no rounds at all)
@@ -1047,10 +1049,13 @@ class LlmSpec extends SparkSpec {
       try Dedup.duplicateClusters(pairs, maxDriverPairs = 0).as[(Long, Long)].collect().toSet
       finally {
         // listener events are async: wait for the bus to drain
-        var last = -1
-        while (countPlans.size() != last) { last = countPlans.size(); Thread.sleep(200) }
+        JobListener.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(listener)
       }
+    // each round's local checkpoint is released once the next one is
+    // built: only the last round's, which the result reads, stays cached
+    val cachedAfter = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet -- cachedBefore
+    assert(cachedAfter.size == 1, s"cached after the loop: $cachedAfter")
     assert(got == Set((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (7L, 7L), (8L, 7L)))
     // quality-ranked survivor selection on top of the clusters: highest
     // score wins its component, doc_id breaks ties

@@ -1,6 +1,7 @@
 package graft
 
 import graft.tools.Serve
+import org.apache.spark.graftshim.JobListener
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
@@ -47,13 +48,17 @@ class TickBudgetSpec extends SparkSpec {
     val sc = spark.sparkContext
     // other suites share the session: only an RDD a tick leaves counts
     val persisted = sc.getPersistentRDDs.keySet
-    try org.apache.spark.JobCounter.around(sc) { c =>
+    def jobsOf[A](f: => A): (A, Seq[String]) = {
+      val (a, js) = JobListener.jobsOf(sc)(f)
+      (a, js.map(_.description))
+    }
+    try {
       running.tick() // first boot: creates every table
       // two catch-up ticks of 50 blocks over 5 files each: the second is
       // the steady state, the first follows the boot tick's commit
       Seq(1, 6).foreach { f0 =>
         (f0 until f0 + 5).foreach(f => publish(f, (10 * f + 1) to (10 * f + 10)))
-        val (h, jobs) = c.jobsOf(running.tick())
+        val (h, jobs) = jobsOf(running.tick())
         assert(h.mostRecentCheckpoint.map(_._1).contains(100L * (f0 + 4) + 100L))
         info(s"catch-up tick: ${jobs.size} jobs: ${jobs.mkString(" | ")}")
         assert(jobs.size <= 12, s"catch-up tick ran ${jobs.size} jobs: ${jobs.mkString(" | ")}")
@@ -61,7 +66,7 @@ class TickBudgetSpec extends SparkSpec {
         assert(sc.getPersistentRDDs.keySet.subsetOf(persisted),
           s"persisted after the tick: ${sc.getPersistentRDDs -- persisted}")
       }
-      val (h, idle) = c.jobsOf(running.tick())
+      val (h, idle) = jobsOf(running.tick())
       assert(h.mostRecentCheckpoint.map(_._1).contains(1100L))
       assert(idle.isEmpty, s"idle tick ran ${idle.size} jobs: ${idle.mkString(" | ")}")
       assert(sc.getPersistentRDDs.keySet.subsetOf(persisted))
